@@ -102,14 +102,24 @@ object EventPipeline {
     */
   val IdChunkSize = 65536
 
-  private def broadcastIds(batch: DataFrame, batchId: Long, key: String,
-                           onImported: (Long, Iterator[Long]) => Unit): Unit =
-    if (onImported ne NoOpOnImported) {
-      import scala.jdk.CollectionConverters._
-      batch.select(key).toLocalIterator().asScala.map(_.getLong(0))
-        .grouped(IdChunkSize)
-        .foreach(chunk => onImported(batchId, chunk.iterator))
-    }
+  /** Hands `batch`'s `key` ids to `onImported` in chunks of at most
+    * [[IdChunkSize]] and, given a `groupCol`, returns the distinct groups
+    * (cast to long) seen on the way — one pass, and no job when there is
+    * nothing to feed or gather.
+    */
+  private[graft] def broadcastIds(batch: DataFrame, batchId: Long, key: String,
+      onImported: (Long, Iterator[Long]) => Unit, groupCol: Option[String] = None): Set[Long] = {
+    val feeding = onImported ne NoOpOnImported
+    if (!feeding && groupCol.isEmpty) return Set.empty
+    import scala.jdk.CollectionConverters._
+    val groups = scala.collection.mutable.HashSet.empty[Long]
+    val ids = batch.select(col(key) +: groupCol.map(col(_).cast("long")).toSeq: _*)
+      .toLocalIterator().asScala
+      .map { r => if (groupCol.nonEmpty) groups += r.getLong(1); r.getLong(0) }
+    if (feeding) ids.grouped(IdChunkSize).foreach(chunk => onImported(batchId, chunk.iterator))
+    else ids.foreach(_ => ())
+    groups.toSet
+  }
 
   /** Idempotent micro-batch import: write the batch to `tableDir` (append,
     * partitioned by day), then surface the imported ids — the
@@ -145,7 +155,7 @@ object EventPipeline {
   /** Latest committed staging snapshot version under `stagingDir` (dirs
     * named `v=<batchId>`, committed iff their _SUCCESS marker exists).
     */
-  private def latestStagingVersion(spark: SparkSession, stagingDir: String): Option[Long] = {
+  private[graft] def latestStagingVersion(spark: SparkSession, stagingDir: String): Option[Long] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val dir = new org.apache.hadoop.fs.Path(stagingDir)
     if (!fs.exists(dir)) None
@@ -155,6 +165,11 @@ object EventPipeline {
       .filter(v => fs.exists(new org.apache.hadoop.fs.Path(s"$stagingDir/v=$v/_SUCCESS")))
       .sorted.lastOption
   }
+
+  /** Partition column of the gated import's spill: `import` rows land in
+    * the table, `held` rows become the next staging snapshot.
+    */
+  private val Gate = "graft_gate"
 
   /** One micro-batch of the complete-block-gated import — the reference's
     * full `import_from_staging()` contract (Persistence/ImportProcedure.cs):
@@ -170,24 +185,53 @@ object EventPipeline {
     * Exposed standalone so specs and batch backfills can drive it without
     * streaming machinery; [[startGatedImport]] wires it into foreachBatch.
     *
-    * Idempotent under Spark's at-least-once batch replay: a replayed batch
-    * re-derives the same complete groups and the main-table anti-join
-    * discards everything already appended. Staging snapshots are
-    * write-new-then-prune, never overwrite-in-place — a crash mid-write
-    * leaves the previous `v=` snapshot committed (no _SUCCESS on the torn
-    * one), so held-back rows can never be lost.
+    * Job plan. `combined` (the batch plus the committed staging snapshot)
+    * is persisted — a caller's batch may be a download that must not run
+    * twice — and every step below reads it or the spill, in four steps:
     *
-    * Scale: every join is keyed (group key / row key); the main-table
-    * anti-join reads only the `key` column (parquet column pruning), and at
-    * 100 TB would be bounded further by partition-pruning the key frontier
-    * (recent days), as the reference bounds its NOT EXISTS with the staging
-    * block range.
+    *  1. Summary: one grouped aggregate of `combined`, collected (one row
+    *     per group of the batch and the snapshot): each group's distinct
+    *     key count against its declared total, and its min/max key. The
+    *     complete groups and the key range of the main-table check come
+    *     from this one collect.
+    *  2. Spill: `combined` joined to the complete-group set — a broadcast
+    *     relation, so a catch-up batch of 10^5 blocks plans as a live one
+    *     does — tags each row `import` or `held`; one anti-join against
+    *     the main table, read only inside the summary's key range, drops
+    *     keys already imported from both sides; rows are deduplicated per
+    *     side by key and written once, partitioned by the tag, to
+    *     `stagingDir/spill`.
+    *  3. Feed: one `toLocalIterator` pass over the import side hands the
+    *     ids to `onImported` in chunks of at most [[IdChunkSize]] and
+    *     gathers the landed groups for `onGroupsImported`.
+    *  4. Append: the import side is appended to `tableDir` (partitioned by
+    *     day); then `onGroupsImported` fires, and the held side gets its
+    *     `_SUCCESS` marker and is renamed to `v=<batchId>`, the new
+    *     committed snapshot; older snapshots and the spill are deleted.
+    *
+    * Crash safety follows from that order. Every plan that reads
+    * `tableDir` runs in step 2, before the append (appending to a path a
+    * live plan reads would refresh its file index mid-scan). The feed
+    * leads the table: a crash after step 3 replays the batch, whose ids
+    * the feed already holds, and a replay after the append re-derives an
+    * empty import side. A crash before the rename leaves the previous
+    * `v=` snapshot committed — a new snapshot is written, then renamed,
+    * never overwritten in place — so held-back rows are never lost, and
+    * under Spark's at-least-once batch replay the main-table anti-join
+    * keeps the import idempotent.
+    *
+    * Scale: the summary and the landed groups are bounded by the groups of
+    * one batch; ids reach the driver a chunk at a time; the main-table
+    * anti-join reads only the `key` column inside the batch's key range
+    * (parquet column pruning and row-group pruning), as the reference
+    * bounds its NOT EXISTS with the staging block range.
     */
   def importGatedBatch(batch: DataFrame, batchId: Long, tableDir: String,
       stagingDir: String, key: String = "event_id", groupCol: String,
       declaredCol: String,
       onImported: (Long, Iterator[Long]) => Unit = NoOpOnImported,
       onGroupsImported: (Long, Iterator[Long]) => Unit = NoOpOnImported): Unit = {
+    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val staged = latestStagingVersion(spark, stagingDir) match {
@@ -197,74 +241,58 @@ object EventPipeline {
     }
     val combined = batch.unionByName(staged).persist()
     try {
-      val completeKeys = combined.groupBy(col(groupCol))
-        .agg(count_distinct(col(key)).as("_n"), max(col(declaredCol)).as("_declared"))
-        .where(col("_n") === col("_declared"))
-        .select(groupCol)
-      val candidates = combined.join(completeKeys, Seq(groupCol), "left_semi")
-        .dropDuplicates(key)
-      // bound the already-imported check to this batch's key range, like
-      // the reference bounds its NOT EXISTS to the staging block range
-      // (ImportProcedure.cs): keys outside [lo, hi] cannot collide, and the
-      // range predicate pushes down to the parquet scan (row-group pruning)
-      // so the anti-join never reads the whole key frontier
-      val bounds = combined.agg(min(col(key)).as("lo"), max(col(key)).as("hi")).collect()(0)
-      val mainKeys =
-        if (fs.exists(new org.apache.hadoop.fs.Path(tableDir)) && !bounds.isNullAt(0))
-          Some(spark.read.schema(batch.schema).parquet(tableDir)
-            .where(col(key).between(bounds.get(0), bounds.get(1)))
-            .select(key))
-        else None
-      val toImport = mainKeys.fold(candidates)(mk =>
-        candidates.join(mk, Seq(key), "left_anti"))
-      // Both writes below are staged OUTSIDE the table first: the anti-joins
-      // read tableDir, and appending to a path a live plan reads refreshes
-      // its cached file index mid-flight (the relation was resolved against
-      // the pre-write partition layout — Spark then fails the scan). Every
-      // tableDir-reading plan therefore executes BEFORE the append.
-      val spillImport = s"$stagingDir/_import_spill"
-      val spillHeld = s"$stagingDir/_held_spill"
-      toImport.write.mode("overwrite").parquet(spillImport)
-      val stable = spark.read.schema(batch.schema).parquet(spillImport)
-      // held = rows of incomplete groups, minus anything already imported
-      // (the reference purges imported staging rows — a re-received copy of
-      // an imported row must not sit in staging forever; its siblings live
-      // in main, so its group can never complete from staging alone)
-      val held = combined.join(completeKeys, Seq(groupCol), "left_anti")
-        .dropDuplicates(key)
-      mainKeys.fold(held)(mk => held.join(mk, Seq(key), "left_anti"))
-        .write.mode("overwrite").parquet(spillHeld)
-      // feed BEFORE the table append: a crash anywhere after this line
-      // replays the batch, re-derives the same toImport set (or an empty
-      // one if the append landed) — either way the feed already holds the
-      // batch's ids, and a re-broadcast only adds dedupable duplicates.
-      // Broadcasting AFTER the append would open the loss window the feed
-      // contract forbids (append lands → crash → replay broadcasts nothing)
-      broadcastIds(stable, batchId, key, onImported)
-      // append AFTER the staging spill is on disk: if we crash here, the
-      // previous v= snapshot is still committed and a replay re-derives
-      // everything (the main anti-join discards what the append landed)
-      stable.withColumn("day", to_date(col("ts")))
-        .write.mode("append").partitionBy("day").parquet(tableDir)
-      // the groups whose rows just LANDED — the per-block "written" signal
-      // (Statistics.cs:24 TrackBlockWritten). Bounded: distinct groups of
-      // one micro-batch. Fired after the append so the duration covers the
-      // full enter→written arc; replays re-fire, which the consumer's
-      // remove-once semantics absorb.
-      if (onGroupsImported ne NoOpOnImported) {
-        val groups = stable.select(col(groupCol).cast("long"))
-          .distinct().collect().map(_.getLong(0))
-        if (groups.nonEmpty) onGroupsImported(batchId, groups.iterator)
+      // 1. summary — hash-partitioning by group first lets the distinct
+      // count and the group aggregate share one shuffle
+      val summary = combined.repartition(col(groupCol)).groupBy(col(groupCol))
+        .agg((count_distinct(col(key)) === max(col(declaredCol))).as("complete"),
+          min(col(key)), max(col(key)))
+        .collect()
+      val completeSet = summary.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && r.getBoolean(1))
+        .map(r => org.apache.spark.sql.Row(r.get(0)))
+      val keyOrder: Ordering[Any] = (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+      val bounds = summary.flatMap(r => Seq(r.get(2), r.get(3))).filter(_ != null)
+      // 2. spill
+      val completeGroups = broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(completeSet: _*),
+        org.apache.spark.sql.types.StructType(Seq(combined.schema(groupCol).copy(name = Gate)))))
+      val gated = combined.join(completeGroups, combined(groupCol) === completeGroups(Gate), "left")
+        .select(combined.columns.toSeq.map(combined(_)) :+
+          when(completeGroups(Gate).isNotNull, "import").otherwise("held").as(Gate): _*)
+      val unseen =
+        if (bounds.isEmpty || !fs.exists(new Path(tableDir))) gated
+        else gated.join(spark.read.schema(batch.schema).parquet(tableDir)
+          .where(col(key).between(bounds.min(keyOrder), bounds.max(keyOrder)))
+          .select(key), Seq(key), "left_anti")
+      val spill = s"$stagingDir/spill"
+      fs.delete(new Path(spill), true) // a crashed call's leftovers
+      unseen.dropDuplicates(Gate, key).write.mode("overwrite").partitionBy(Gate).parquet(spill)
+      // 3. feed, then 4. append — both only when some group completed
+      val importSide = new Path(s"$spill/$Gate=import")
+      if (fs.exists(importSide)) {
+        val stable = spark.read.schema(batch.schema).parquet(importSide.toString)
+        val landed = broadcastIds(stable, batchId, key, onImported,
+          Option.when(onGroupsImported ne NoOpOnImported)(groupCol))
+        stable.withColumn("day", to_date(col("ts")))
+          .write.mode("append").partitionBy("day").parquet(tableDir)
+        // the per-block "written" signal (Statistics.cs:24
+        // TrackBlockWritten), fired after the append so its duration
+        // covers the full enter→written arc; replays re-fire, which the
+        // consumer's remove-once semantics absorb
+        if (landed.nonEmpty) onGroupsImported(batchId, landed.iterator)
       }
-      // commit the new snapshot by rename (atomic), then prune older ones
-      val committed = new org.apache.hadoop.fs.Path(s"$stagingDir/v=$batchId")
+      // commit the held side as the new snapshot by rename (atomic), then
+      // prune older ones; with no held rows the snapshot is empty
+      val heldSide = new Path(s"$spill/$Gate=held")
+      fs.mkdirs(heldSide)
+      fs.create(new Path(heldSide, "_SUCCESS"), true).close()
+      val committed = new Path(s"$stagingDir/v=$batchId")
       fs.delete(committed, true) // replay leftovers
-      fs.rename(new org.apache.hadoop.fs.Path(spillHeld), committed)
-      fs.listStatus(new org.apache.hadoop.fs.Path(stagingDir)).toSeq
+      fs.rename(heldSide, committed)
+      fs.listStatus(new Path(stagingDir)).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
         .filter(_.getPath.getName.stripPrefix("v=").toLong < batchId)
         .foreach(s => fs.delete(s.getPath, true))
-      fs.delete(new org.apache.hadoop.fs.Path(spillImport), true)
+      fs.delete(new Path(spill), true)
       ()
     } finally { combined.unpersist(); () }
   }

@@ -50,10 +50,12 @@ object ImportFeed {
     (batchId, ids) => {
       import spark.implicits._
       // chunk is already materialized by the hook (≤ IdChunkSize), so this
-      // toSeq is bounded; the write is one small append into b=<batchId>
+      // toSeq is bounded; the write is one small append into b=<batchId>,
+      // one file per chunk (coalesce merges the local partitions without
+      // the shuffle job a repartition would run)
       ids.toSeq.toDF("event_id")
         .withColumn("b", lit(batchId))
-        .repartition(1)
+        .coalesce(1)
         .write.mode("append").partitionBy("b").parquet(dir)
     }
 

@@ -1,11 +1,16 @@
 package graft
 
 import graft.streaming.EventPipeline
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
-import java.nio.file.Files
+import org.scalacheck.{Gen, Prop}
 
 case class GatedRow(event_id: Long, ts: Timestamp, block: Long, declared: Long, payload: String)
+
+/** A gated-import row whose group may be null (the property's input). */
+case class MaybeGroupedRow(event_id: Long, ts: Timestamp, block: Option[Long], declared: Long,
+                           payload: String)
 
 /** Complete-block gating (reference ImportProcedure.cs step 1.1): a
   * micro-batch imports ONLY rows whose group is complete; incomplete groups
@@ -22,9 +27,9 @@ class GatedImportSpec extends SparkSpec {
   test("streaming: partial groups are held back, then import once completed") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[GatedRow]
-    val tableDir = Files.createTempDirectory("graft-gated-table").toString
-    val stagingDir = Files.createTempDirectory("graft-gated-staging").toString
-    val ckpt = Files.createTempDirectory("graft-gated-ckpt").toString
+    val tableDir = tempDir("graft-gated-table")
+    val stagingDir = tempDir("graft-gated-staging")
+    val ckpt = tempDir("graft-gated-ckpt")
 
     var broadcasts = Vector.empty[(Long, Set[Long])]
     val q = EventPipeline.startGatedImport(mem.toDF(), tableDir, stagingDir, ckpt,
@@ -53,8 +58,8 @@ class GatedImportSpec extends SparkSpec {
   }
 
   test("batch replay is idempotent: same batch twice appends nothing twice") {
-    val tableDir = Files.createTempDirectory("graft-gated2-table").toString
-    val stagingDir = Files.createTempDirectory("graft-gated2-staging").toString
+    val tableDir = tempDir("graft-gated2-table")
+    val stagingDir = tempDir("graft-gated2-staging")
     val batch = Seq(row(1, 100, 2), row(2, 100, 2), row(3, 101, 2)).toDF
 
     EventPipeline.importGatedBatch(batch, 0L, tableDir, stagingDir,
@@ -70,8 +75,8 @@ class GatedImportSpec extends SparkSpec {
   }
 
   test("empty micro-batches are harmless no-ops at any point in the flow") {
-    val tableDir = Files.createTempDirectory("graft-gated4-table").toString
-    val stagingDir = Files.createTempDirectory("graft-gated4-staging").toString
+    val tableDir = tempDir("graft-gated4-table")
+    val stagingDir = tempDir("graft-gated4-staging")
     val empty = Seq.empty[GatedRow].toDF
     // empty batch against an empty table
     EventPipeline.importGatedBatch(empty, 0L, tableDir, stagingDir,
@@ -91,9 +96,9 @@ class GatedImportSpec extends SparkSpec {
 
   test("ImportFeed: subscriber poll sees exactly the imported ids per batch, replay-safe") {
     import graft.streaming.ImportFeed
-    val tableDir = Files.createTempDirectory("graft-feed-table").toString
-    val stagingDir = Files.createTempDirectory("graft-feed-staging").toString
-    val feedDir = Files.createTempDirectory("graft-feed-log").toString + "/feed"
+    val tableDir = tempDir("graft-feed-table")
+    val stagingDir = tempDir("graft-feed-staging")
+    val feedDir = tempDir("graft-feed-log") + "/feed"
     val sub = ImportFeed.subscriber(spark, feedDir)
 
     // batch 0: block 100 complete, block 101 partial → feed gets {1,2}
@@ -115,6 +120,11 @@ class GatedImportSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(feed == Set((0L, 1L), (0L, 2L), (1L, 3L), (1L, 4L)),
       "feed is exactly the per-batch imported sets")
+    // each batch handed over one chunk, and each chunk is one part file
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    for (b <- Seq(0L, 1L))
+      assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$feedDir/b=$b"))
+        .count(_.getPath.getName.startsWith("part-")) == 1, s"one part file in b=$b")
     // a torn chunk replayed under the same batch id dedups away
     sub(1L, Iterator(3L, 4L))
     assert(ImportFeed.recentlyImported(spark, feedDir)
@@ -130,9 +140,9 @@ class GatedImportSpec extends SparkSpec {
 
   test("ImportFeed: feed leads the table — a crash in the subscriber loses no ids") {
     import graft.streaming.ImportFeed
-    val tableDir = Files.createTempDirectory("graft-feedord-table").toString + "/t"
-    val stagingDir = Files.createTempDirectory("graft-feedord-staging").toString
-    val feedDir = Files.createTempDirectory("graft-feedord-log").toString + "/feed"
+    val tableDir = tempDir("graft-feedord-table") + "/t"
+    val stagingDir = tempDir("graft-feedord-staging")
+    val feedDir = tempDir("graft-feedord-log") + "/feed"
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
     // a subscriber that crashes BEFORE writing: because broadcastIds runs
@@ -159,7 +169,7 @@ class GatedImportSpec extends SparkSpec {
 
   test("ImportFeed: empty/pruned/foreign dirs are a schema-stable empty feed") {
     import graft.streaming.ImportFeed
-    val feedDir = Files.createTempDirectory("graft-feedempty").toString + "/feed"
+    val feedDir = tempDir("graft-feedempty") + "/feed"
     // nonexistent dir
     assert(ImportFeed.recentlyImported(spark, feedDir).collect().isEmpty)
     assert(ImportFeed.recentlyImported(spark, feedDir).columns.toSeq
@@ -180,7 +190,7 @@ class GatedImportSpec extends SparkSpec {
 
   test("ImportFeed + ParquetCompactor: compaction preserves the poll, GCs slivers") {
     import graft.streaming.ImportFeed
-    val feedDir = Files.createTempDirectory("graft-feedcomp").toString + "/feed"
+    val feedDir = tempDir("graft-feedcomp") + "/feed"
     val sub = ImportFeed.subscriber(spark, feedDir)
     // 3 batches × several chunk appends each → many sliver files
     for (b <- 0L to 2L; c <- 0 until 3)
@@ -234,8 +244,8 @@ class GatedImportSpec extends SparkSpec {
     // blocks 100 (complete 2/2), 101 (INCOMPLETE 1/2), 102 (complete 1/1):
     // the cut is 101 and must also take complete-but-later 102 with it
     val rows = Seq(row(1, 100, 2), row(2, 100, 2), row(3, 101, 2), row(5, 102, 1))
-    val tableA = Files.createTempDirectory("graft-dib-a").toString + "/t"
-    val tableB = Files.createTempDirectory("graft-dib-b").toString + "/t"
+    val tableA = tempDir("graft-dib-a") + "/t"
+    val tableB = tempDir("graft-dib-b") + "/t"
     rows.toDF.withColumn("day", to_date(col("ts")))
       .write.partitionBy("day").parquet(tableA)
     rows.toDF.withColumn("day", to_date(col("ts")))
@@ -261,8 +271,8 @@ class GatedImportSpec extends SparkSpec {
   }
 
   test("a torn staging snapshot (no _SUCCESS) is ignored; held rows survive") {
-    val tableDir = Files.createTempDirectory("graft-gated3-table").toString
-    val stagingDir = Files.createTempDirectory("graft-gated3-staging").toString
+    val tableDir = tempDir("graft-gated3-table")
+    val stagingDir = tempDir("graft-gated3-staging")
 
     EventPipeline.importGatedBatch(Seq(row(3, 101, 2)).toDF, 0L, tableDir, stagingDir,
       groupCol = "block", declaredCol = "declared")
@@ -276,5 +286,90 @@ class GatedImportSpec extends SparkSpec {
       groupCol = "block", declaredCol = "declared")
     assert(spark.read.parquet(tableDir).select("event_id").as[Long].collect().sorted.toSeq
       == Seq(3L, 4L), "held-back row was not lost to the torn snapshot")
+  }
+
+  /** Random gated-import batch sequences. Every sequence holds: groups cut
+    * across batches, duplicate rows within and across batches, a final
+    * batch re-sending rows whose blocks landed, a replayed batch id, empty
+    * batches, a key shared by two groups and a null group.
+    *
+    * The shared key belongs to group `A`, whose rows arrive in one batch,
+    * and to group `S`, which declares one row more than it can ever have.
+    * So while the key is unimported, its two rows sit on different sides
+    * of the gate (A imports, S is held) and each implementation keeps
+    * both; the property never depends on which of two different rows a
+    * per-key dedup keeps, which neither implementation defines.
+    */
+  private val batchSequences: Gen[Seq[(Long, Seq[MaybeGroupedRow])]] = {
+    def r(id: Long, block: Option[Long], declared: Long) =
+      MaybeGroupedRow(id, ts("2024-01-01 10:00:00"), block, declared, s"p$id")
+    for {
+      declared <- Gen.listOfN(4, Gen.choose(1, 3))
+      nNull <- Gen.choose(1, 2)
+      cuts <- Gen.choose(2, 5)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield {
+      val rng = new scala.util.Random(seed)
+      // groups 100..103; group 100 is A and arrives whole
+      val groups = declared.zipWithIndex.map { case (d, j) =>
+        val g = 100L + j
+        (0 until d).map(i => r(g * 10 + i, Some(g), d.toLong))
+      }
+      val shared = groups.head.head.event_id
+      val s = Seq(r(2000, Some(200L), 3), r(shared, Some(200L), 3))
+      val nulls = (0 until nNull).map(i => r(9000L + i, None, nNull.toLong))
+      val units = rng.shuffle(
+        Seq(groups.head) ++ groups.tail.flatMap(_.map(Seq(_))) ++ s.map(Seq(_)) ++ nulls.map(Seq(_)))
+      val ends = (rng.shuffle((1 until units.size).toList).take(cuts - 1).sorted :+ units.size)
+      val cut = (0 +: ends).sliding(2).map { case Seq(a, b) => units.slice(a, b).flatten }.toVector
+      // duplicates: copies of rows already sent, in this batch or before
+      val seen = cut.scanLeft(Seq.empty[MaybeGroupedRow])(_ ++ _).tail
+      val withDups = cut.zip(seen).map { case (b, sent) =>
+        rng.shuffle(b ++ Seq.fill(rng.nextInt(3))(sent(rng.nextInt(sent.size))))
+      }
+      // the last batch re-sends rows whose blocks have all landed by then
+      val resend = rng.shuffle(groups.flatten).take(2)
+      val all = (Seq.empty[MaybeGroupedRow] +: withDups :+ resend)
+        .patch(1 + rng.nextInt(withDups.size + 1), Seq(Seq.empty), 0)
+      val replayAt = rng.nextInt(all.size)
+      all.zipWithIndex.flatMap { case (b, i) =>
+        if (i == replayAt) Seq(i.toLong -> b, i.toLong -> b) else Seq(i.toLong -> b)
+      }
+    }
+  }
+
+  test("property: importGatedBatch matches GatedImportRef on random batch sequences") {
+    type Import = (DataFrame, Long, String, String, (Long, Iterator[Long]) => Unit,
+      (Long, Iterator[Long]) => Unit) => Unit
+    // table rows, ids per call, groups per call, committed snapshot
+    def run(seq: Seq[(Long, Seq[MaybeGroupedRow])], imp: Import) = {
+      val (tableDir, stagingDir) = (tempDir("graft-gated-prop-table"), tempDir("graft-gated-prop-staging"))
+      val calls = seq.map { case (batchId, rows) =>
+        val (ids, groups) = (Vector.newBuilder[Long], Vector.newBuilder[Long])
+        imp(rows.toDF(), batchId, tableDir, stagingDir, (_, it) => ids ++= it, (_, it) => groups ++= it)
+        (batchId, ids.result().sorted, groups.result().sorted)
+      }
+      def sortedRows(df: DataFrame) = df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+      val table =
+        if (!EventPipeline.committedParquetExists(spark, tableDir)) Seq.empty
+        else sortedRows(spark.read.parquet(tableDir))
+      val snapshot = EventPipeline.latestStagingVersion(spark, stagingDir).map(v =>
+        v -> sortedRows(spark.read.schema(Seq.empty[MaybeGroupedRow].toDF().schema)
+          .parquet(s"$stagingDir/v=$v")))
+      (table, calls, snapshot)
+    }
+    val prop = Prop.forAllNoShrink(batchSequences) { seq =>
+      val got = run(seq, (b, id, t, st, onIds, onGroups) => EventPipeline.importGatedBatch(
+        b, id, t, st, groupCol = "block", declaredCol = "declared",
+        onImported = onIds, onGroupsImported = onGroups))
+      val want = run(seq, (b, id, t, st, onIds, onGroups) => GatedImportRef.importGatedBatch(
+        b, id, t, st, groupCol = "block", declaredCol = "declared",
+        onImported = onIds, onGroupsImported = onGroups))
+      Prop(got == want) :| s"batches: $seq\n got: $got\nwant: $want"
+    }
+    val result = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(8)
+        .withInitialSeed(org.scalacheck.rng.Seed(20241017L)), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 }

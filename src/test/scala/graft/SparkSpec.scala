@@ -7,7 +7,23 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession fixture. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
-  override def afterAll(): Unit = () // shared session; stopped by JVM exit
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A fresh directory under the system temp dir, deleted with everything
+    * in it after the suite.
+    */
+  def tempDir(prefix: String): String = tempDirs.synchronized {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs += dir
+    dir.toString
+  }
+
+  // the session is shared and stopped by JVM exit; only temp dirs go here
+  override def afterAll(): Unit = tempDirs.synchronized {
+    tempDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    tempDirs.clear()
+  }
 }
 
 object SparkSpec {
