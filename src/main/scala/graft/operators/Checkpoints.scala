@@ -1,10 +1,15 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
-/** Lineage-cut policy for the iterative operators ([[Graph.pageRank]],
-  * [[Graph.personalizedPageRank]], [[Graph.widestPaths]],
-  * [[Dedup.dupClusters]]).
+/** Lineage-cut policy for the iterative operators. The DataFrame loops
+  * use [[cut]] on frames: [[Graph]]'s widestPaths, hits, kCore, bfsHops,
+  * stronglyConnectedComponents, labelPropagation, the HyperBall sweeps,
+  * temporalReach, betweenness and randomWalks, [[Dedup.dupClusters]],
+  * [[Ann]]'s labelPropagation and kCenterSample, and
+  * [[Node2Vec.trainSgns]]. The PageRank family uses the RDD arm.
   *
   * Default (no `checkpointDir`): eager `localCheckpoint` per round — flat
   * plans (the 2^n-lineage rule), zero external storage. The blocks live in
@@ -21,6 +26,13 @@ import org.apache.spark.sql.DataFrame
   * for a loop that references its state twice per round the plan tree is
   * ≤ 2^every nodes, so keep `every` modest; 5 ≈ 32-node plans).
   *
+  * The RDD arm serves loops whose state is co-partitioned pair RDDs, so
+  * that a round adds one shuffle and no job ([[Graph.pageRank]],
+  * [[Graph.pageRankWeighted]], [[Graph.personalizedPageRank]]). By
+  * default it cuts only the loop-invariant frame (round 0) and leaves the
+  * rounds to run as one lineage in the consumer's job; with a directory it
+  * checkpoints that frame and every `every`-th round reliably.
+  *
   * Results are knob-INDEPENDENT (spec'd in CheckpointKnobSpec): the policy
   * changes where blocks live, never what is computed.
   */
@@ -35,13 +47,42 @@ object Checkpoints {
     require(every >= 1, s"checkpoint every < 1: $every")
     checkpointDir match {
       case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        if (!sc.getCheckpointDir.contains(dir)) sc.setCheckpointDir(dir)
+        useDir(df.sparkSession.sparkContext, dir)
         if (round % every == 0) df.checkpoint(true)
         else df.persist()
       case None => df.localCheckpoint(true)
     }
   }
+
+  /** The RDD arm of [[cut]]. `round` 0 is the loop-invariant RDD the
+    * rounds join against; rounds 1.. are loop states.
+    *
+    * Default: round 0 is marked for a `localCheckpoint` and the rounds are
+    * left alone, so their lineage grows by one shuffle a round and no job.
+    * A mark lands with the first action over the RDD: the caller runs one
+    * (its set-up count) right after cutting round 0.
+    *
+    * With `checkpointDir`: round 0 and every `every`-th round are persisted
+    * and marked for a reliable `checkpoint()`. Rounds 1.. are materialized
+    * at once by a count, because a cut that waited for the consumer's job
+    * would not shorten that job's lineage.
+    */
+  def cut[T](rdd: RDD[T], round: Int, checkpointDir: Option[String],
+             every: Int): RDD[T] = {
+    require(every >= 1, s"checkpoint every < 1: $every")
+    checkpointDir match {
+      case Some(dir) if round % every == 0 =>
+        useDir(rdd.sparkContext, dir)
+        rdd.persist().checkpoint()
+        if (round > 0) rdd.count()
+      case None if round == 0 => rdd.localCheckpoint()
+      case _ =>
+    }
+    rdd
+  }
+
+  private def useDir(sc: SparkContext, dir: String): Unit =
+    if (!sc.getCheckpointDir.contains(dir)) sc.setCheckpointDir(dir)
 
   /** Free the storage behind a frame [[cut]] returned, once it is
     * SUPERSEDED — the new round's frame is materialized with no lineage

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DoubleType, StructField, StructType}
 
 /** Distributed graph primitives over edge lists — the shapes the Circles
   * pathfinder's precompute consumes (the trust/capacity graph of
@@ -108,48 +110,23 @@ object Graph {
     * EVERY iteration on both engines, so cross-engine double-sum ulp drift
     * cannot compound across rounds.
     *
-    * Scale shape, per iteration: one join of edges⋈ranks on src (edges
-    * pre-partitioned by src once, outside the loop), one partial-agg sum
-    * shuffle on dst, one co-partitioned left join back to the node set —
-    * payload is (node, double) pairs regardless of graph size. Eager
-    * localCheckpoint per round keeps the plan flat (the 2^n-lineage rule);
-    * iteration count is a fixed knob, not data-dependent. Hub skew lives
-    * in the dst-sum, which partial-aggregates map-side — the hot key
-    * arrives at its reducer once per map partition.
+    * Scale shape: the edge collapse and the out-degrees are DataFrame
+    * plans, run once; the rounds are [[powerIteration]]'s co-partitioned
+    * pair RDDs. Each round adds one shuffle (the dst-sum, which combines
+    * map-side, so a hub's terms reach its reducer once per map partition)
+    * and no job: the links⋈ranks and links⟕sums joins are narrow, and
+    * every round runs inside the consumer's one job. Payload is (node,
+    * double) pairs regardless of graph size; iteration count is a fixed
+    * knob, not data-dependent.
     *
     * Input `edges`: (src, dst, cap) — cap>0/self-loop normalization as
     * [[widestPaths]]; parallel edges collapse to one.
     */
   def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
                checkpointDir: Option[String] = None,
-               checkpointEvery: Int = 5): DataFrame = {
-    def cut(df: DataFrame, round: Int) =
-      Checkpoints.cut(df, round, checkpointDir, checkpointEvery)
-    val e = cut(edges
-      .where(col("cap") > 0 && col("src") =!= col("dst"))
-      .select("src", "dst").distinct()
-      .repartition(col("src")), 0)
-    val nodes = cut(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(), 0)
-    // degree is loop-INVARIANT: join it onto the edge frame once, outside
-    // the loop (one materialized (src, dst, deg) frame), instead of
-    // re-joining e⋈outdeg every iteration — one shuffle join per
-    // iteration gone, same contributions
-    val eDeg = cut(e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src"), 0)
-    val n = nodes.count() // bounded driver aggregate: one long
-    var ranks = nodes.select(col("node"), round(lit(1.0d / n), 12).as("r"))
-    for (it <- 1 to iters) {
-      val contribs = eDeg
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), (col("r") / col("deg")).as("c"))
-        .groupBy("node").agg(sum("c").as("s"))
-      ranks = cut(nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          round(lit((1.0d - damping) / n) +
-            lit(damping) * coalesce(col("s"), lit(0.0d)), 12).as("r")), it)
-    }
-    ranks.orderBy(col("r").desc, col("node"))
-  }
+               checkpointEvery: Int = 5): DataFrame =
+    powerIteration(uniformEdges(edges), None, iters, damping,
+      exactTerms = false, checkpointDir, checkpointEvery)
 
   /** WEIGHTED PageRank: rank flows proportional to edge WEIGHT instead of
     * uniformly over out-edges — on the trust graph the weight is the
@@ -163,39 +140,19 @@ object Graph {
     * Determinism contract as [[pageRank]] plus the HITS sum rule: each
     * edge's contribution rounds to 12 dp and sums as decimal(28,14)
     * (cross-engine exact), ranks round to 12 dp per iteration. Scale
-    * shape identical to [[pageRank]] — the weight rides the edge row;
-    * parallel edges collapse to max weight (the capacity-graph
-    * convention).
+    * shape identical to [[pageRank]] — one shuffle a round, all rounds in
+    * one job, both joins narrow; the weight rides the link and the term
+    * shuffles as an exact decimal. Parallel edges collapse to max weight
+    * (the capacity-graph convention).
     */
   def pageRankWeighted(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
                        checkpointDir: Option[String] = None,
                        checkpointEvery: Int = 5): DataFrame = {
-    def cut(df: DataFrame, round: Int) =
-      Checkpoints.cut(df, round, checkpointDir, checkpointEvery)
-    val e = cut(edges
+    val e = edges
       .where(col("cap") > 0 && col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(max(col("cap")).as("w"))
-      .repartition(col("src")), 0)
-    val nodes = cut(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(), 0)
-    // loop-invariant weight total joined onto the edges ONCE (the
-    // [[pageRank]] eDeg discipline)
-    val eW = cut(e.join(e.groupBy("src").agg(sum(col("w")).as("wout")), "src"), 0)
-    val n = nodes.count() // bounded driver aggregate: one long
-    var ranks = nodes.select(col("node"), round(lit(1.0d / n), 12).as("r"))
-    for (it <- 1 to iters) {
-      val contribs = eW
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          round(col("r") * col("w") / col("wout"), 12)
-            .cast("decimal(28,14)").as("c"))
-        .groupBy("node").agg(sum("c").cast("double").as("s"))
-      ranks = cut(nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          round(lit((1.0d - damping) / n) +
-            lit(damping) * coalesce(col("s"), lit(0.0d)), 12).as("r")), it)
-    }
-    ranks.orderBy(col("r").desc, col("node"))
+    powerIteration(e, None, iters, damping, exactTerms = true,
+      checkpointDir, checkpointEvery)
   }
 
   /** Personalized PageRank (random walk with restart): rank mass restarts
@@ -210,10 +167,9 @@ object Graph {
     * Same determinism contract as [[pageRank]]: dangling mass dropped (the
     * unrolled-SQL-expressible variant), ranks rounded to 12 decimals every
     * iteration so cross-engine ulp drift cannot compound. Scale shape is
-    * identical — per iteration one edges⋈ranks join on pre-partitioned
-    * src, one partial-agg dst sum, one co-partitioned join back; the seed
-    * set rides as a broadcast flag join computed ONCE outside the loop
-    * ((node, is_seed) pairs), and |S| is one bounded driver count.
+    * identical — one shuffle a round, all rounds in one job, both joins
+    * narrow; the seed flags ride the links, set by the same shuffle that
+    * builds them, and |S| comes from the set-up count that also yields N.
     *
     * Input `edges`: (src, dst, cap), normalized as [[pageRank]]; `seeds`:
     * one `node` column (ids absent from the graph contribute restart mass
@@ -222,43 +178,112 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iters: Int = 5, damping: Double = 0.85,
                            checkpointDir: Option[String] = None,
-                           checkpointEvery: Int = 5): DataFrame = {
-    def cut(df: DataFrame, round: Int) =
-      Checkpoints.cut(df, round, checkpointDir, checkpointEvery)
-    val e = cut(edges
+                           checkpointEvery: Int = 5): DataFrame =
+    powerIteration(uniformEdges(edges), Some(seeds), iters, damping,
+      exactTerms = false, checkpointDir, checkpointEvery)
+
+  /** The unweighted family's edges: parallel edges collapse to one of
+    * weight 1, so a source's weight total is its out-degree. The weight is
+    * a long: summed as a double, the same total plans a global sort of the
+    * edges first, two more Spark jobs.
+    */
+  private def uniformEdges(edges: DataFrame): DataFrame =
+    edges
       .where(col("cap") > 0 && col("src") =!= col("dst"))
       .select("src", "dst").distinct()
-      .repartition(col("src")), 0)
-    val nodes = cut(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(), 0)
-    // loop-invariant degree joined onto the edges ONCE (the [[pageRank]]
-    // eDeg discipline)
-    val eDeg = cut(e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src"), 0)
-    val seedNodes = cut(nodes.join(seeds.select("node").distinct(),
-      Seq("node"), "left_semi"), 0)
-    val nSeeds = seedNodes.count() // bounded driver aggregate: one long
-    if (nSeeds == 0) {
-      // an empty graph has no ranks (total on empty input); seeds missing
-      // from a NON-empty graph is caller error
-      require(nodes.isEmpty, "personalizedPageRank: no seed intersects the graph")
-      return nodes.select(col("node"), lit(0.0d).as("r"))
-    }
-    val flagged = cut(nodes
-      .join(broadcast(seedNodes.withColumn("is_seed", lit(true))), Seq("node"), "left")
-      .select(col("node"), coalesce(col("is_seed"), lit(false)).as("is_seed")), 0)
-    val restart = when(col("is_seed"), lit(1.0d / nSeeds)).otherwise(lit(0.0d))
-    var ranks = flagged.select(col("node"), round(restart, 12).as("r"))
+      .withColumn("w", lit(1L))
+
+  /** One node of [[powerIteration]]'s adjacency: its out-links with their
+    * weights, the weight total they share, and whether walks restart here.
+    */
+  private final case class OutLinks(dst: Array[Any], w: Array[Double],
+                                    total: Double, seed: Boolean)
+
+  /** Spark's `round(x, 12)` on a double, which both engines apply to
+    * every rank and weighted term.
+    */
+  private def round12(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(12, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** The power iteration behind [[pageRank]], [[pageRankWeighted]] and
+    * [[personalizedPageRank]]. `edges` holds one row per link: `src`,
+    * `dst` and a weight `w`. A link carries r·w/W of its source's rank, W
+    * the source's weight total, summed as a DataFrame aggregate (with
+    * w = 1, W is the out-degree and r·1/W is exactly r/outdeg). With
+    * `exactTerms` each term rounds to 12 dp, is cast to decimal(28,14) and
+    * sums exactly, as [[pageRankWeighted]]'s contract says; otherwise
+    * terms sum as doubles. `seeds` = None
+    * restarts uniformly, (1−d)/N; Some restarts at the seeds in the
+    * graph, (1−d)·[v ∈ S]/|S|.
+    *
+    * The adjacency is one pair RDD keyed by node — every node, dst-only
+    * ones included — under a HashPartitioner of
+    * `spark.sql.shuffle.partitions`, cut once through [[Checkpoints]]; one
+    * count over it lands the cut and yields N and |S|. Ranks come from
+    * `mapValues` over it, so they share its partitioner: the
+    * adjacency⋈ranks and adjacency⟕sums joins are narrow, and a round's
+    * one shuffle is the `reduceByKey` of its terms. No action runs in the
+    * loop, so all rounds run in the consumer's job (the co-partitioned
+    * PageRank of Zaharia et al., NSDI 2012). The result keeps the node
+    * column's type and the family's `orderBy(r desc, node)`.
+    */
+  private def powerIteration(edges: DataFrame, seeds: Option[DataFrame],
+                             iters: Int, damping: Double, exactTerms: Boolean,
+                             checkpointDir: Option[String],
+                             checkpointEvery: Int): DataFrame = {
+    val spark = edges.sparkSession
+    val node = edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node"))).schema.head
+    require(node.dataType != BinaryType, "power iteration: binary node ids do not hash by value")
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val links = edges.join(edges.groupBy("src").agg(sum(col("w")).as("total")), "src")
+    val out = links.select(col("src").cast(node.dataType), col("dst").cast(node.dataType),
+        col("w").cast(DoubleType), col("total").cast(DoubleType)).rdd
+      .flatMap(r => Iterator(r.get(0) -> Some((r.get(1), r.getDouble(2), r.getDouble(3))),
+        r.get(1) -> None))
+    val seedKeys = seeds.fold(spark.sparkContext.emptyRDD[(Any, Unit)])(
+      _.select(col("node").cast(node.dataType)).rdd.map(r => r.get(0) -> (())))
+    val adj = Checkpoints.cut(out.cogroup(seedKeys, part).flatMapValues {
+      case (mentions, _) if mentions.isEmpty => None // a seed outside the graph
+      case (mentions, seedMarks) =>
+        val ls = mentions.flatten.toArray
+        Some(OutLinks(ls.map(_._1), ls.map(_._2), ls.headOption.fold(0.0d)(_._3),
+          seedMarks.nonEmpty))
+    }, 0, checkpointDir, checkpointEvery)
+    val (n, nSeeds) = adj.values.aggregate((0L, 0L))(
+      (acc, l) => (acc._1 + 1, acc._2 + (if (l.seed) 1 else 0)),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+    // an empty graph has no ranks (total on empty input); seeds missing
+    // from a NON-empty graph is caller error
+    if (seeds.isDefined && nSeeds == 0)
+      require(n == 0, "personalizedPageRank: no seed intersects the graph")
+    // the restart vector and its damped share, spelled as the SQL twins
+    // spell them: (1−d)/N is not (1−d)·(1/N) to the last ulp
+    val (restart, teleport): (OutLinks => Double, OutLinks => Double) =
+      if (seeds.isEmpty) (_ => 1.0d / n, _ => (1.0d - damping) / n)
+      else {
+        val r: OutLinks => Double = l => if (l.seed) 1.0d / nSeeds else 0.0d
+        (r, l => (1.0d - damping) * r(l))
+      }
+    var ranks = adj.mapValues(l => round12(restart(l)))
     for (it <- 1 to iters) {
-      val contribs = eDeg
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), (col("r") / col("deg")).as("c"))
-        .groupBy("node").agg(sum("c").as("s"))
-      ranks = cut(flagged.join(contribs, Seq("node"), "left")
-        .select(col("node"), col("is_seed"),
-          round(lit(1.0d - damping) * restart +
-            lit(damping) * coalesce(col("s"), lit(0.0d)), 12).as("r")), it)
+      val terms = adj.join(ranks, part).values.flatMap { case (l, r) =>
+        l.dst.indices.iterator.map(i => l.dst(i) -> r * l.w(i) / l.total)
+      }
+      val sums =
+        if (!exactTerms) terms.reduceByKey(part, _ + _)
+        else terms
+          .mapValues(t => java.math.BigDecimal.valueOf(round12(t))
+            .setScale(14, java.math.RoundingMode.HALF_UP))
+          .reduceByKey(part, _ add _).mapValues(_.doubleValue)
+      ranks = Checkpoints.cut(adj.leftOuterJoin(sums, part).mapValues { case (l, s) =>
+        round12(teleport(l) + damping * s.getOrElse(0.0d))
+      }, it, checkpointDir, checkpointEvery)
     }
-    ranks.select("node", "r").orderBy(col("r").desc, col("node"))
+    val schema = StructType(Seq(node, StructField("r", DoubleType)))
+    spark.createDataFrame(ranks.map { case (k, r) => Row(k, r) }, schema)
+      .orderBy(col("r").desc, col("node"))
   }
 
   /** HITS hubs & authorities over the directed trust graph — the

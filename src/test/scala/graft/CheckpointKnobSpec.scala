@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Dedup, Graph}
-import java.nio.file.Files
 
 /** The reliable-checkpoint knob ([[graft.operators.Checkpoints]]) is a
   * fault-tolerance policy, not a semantics change: every iterative
@@ -13,8 +12,7 @@ import java.nio.file.Files
 class CheckpointKnobSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ckDir(): Option[String] =
-    Some(Files.createTempDirectory("graft-ck").toString)
+  private def ckDir(): Option[String] = Some(tempDir("graft-ck"))
 
   // a graph with a hub, a chain (diameter > 2 exercises multiple rounds),
   // parallel edges, and a cycle

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.{EventPipeline, ImportFeed}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Job-count guard for the gated import: on small live batches its cost is
   * the number of Spark jobs it runs per micro-batch, not data, so the count
@@ -24,24 +23,6 @@ class GatedImportJobsSpec extends SparkSpec {
     */
   private def blocks(from: Long, to: Long) =
     (from until to).flatMap(b => Seq(row(b * 10, b, 2), row(b * 10 + 1, b, 2))) :+ row(to * 10, to, 2)
-
-  /** Spark jobs started on this thread's job group while `f` runs. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-jobs-${System.nanoTime()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "gated import job count")
-      try f finally sc.clearJobGroup()
-      org.apache.spark.SpecBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    n.get
-  }
 
   test("one gated-import micro-batch runs at most half the earlier job count") {
     val (tableDir, stagingDir) = (tempDir("graft-gated-jobs-table"), tempDir("graft-gated-jobs-staging"))

@@ -357,7 +357,7 @@ class GraphSpec extends SparkSpec {
     val got = graft.operators.Graph.kCore(edges, k).as[(Long, Long)].collect().toMap
     assert(got == expected)
     // reliable-checkpoint knob must not change the answer
-    val dir = java.nio.file.Files.createTempDirectory("graft-kcore-ck").toString
+    val dir = tempDir("graft-kcore-ck")
     val withKnob = graft.operators.Graph.kCore(edges, k,
       checkpointDir = Some(dir), checkpointEvery = 2).as[(Long, Long)].collect().toMap
     assert(withKnob == expected)
@@ -418,7 +418,7 @@ class GraphSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(got == expected)
     // reliable-checkpoint knob must not change the answer
-    val dir = java.nio.file.Files.createTempDirectory("graft-bfs-ck").toString
+    val dir = tempDir("graft-bfs-ck")
     val withKnob = Graph.bfsHops(edges.toDF("src", "dst"), sources.toDF("node"),
       maxHops, checkpointDir = Some(dir), checkpointEvery = 2)
       .as[(Long, Long)].collect().toMap
@@ -504,7 +504,7 @@ class GraphSpec extends SparkSpec {
     val got = Graph.stronglyConnectedComponents(edges.toDF("src", "dst"))
       .as[(Long, Long)].collect().toMap
     assert(got == expected)
-    val dir = java.nio.file.Files.createTempDirectory("graft-scc-ck").toString
+    val dir = tempDir("graft-scc-ck")
     val withKnob = Graph.stronglyConnectedComponents(edges.toDF("src", "dst"),
       checkpointDir = Some(dir), checkpointEvery = 2)
       .as[(Long, Long)].collect().toMap
@@ -694,7 +694,7 @@ class GraphSpec extends SparkSpec {
       .as[(String, String)].collect().toMap
     assert(got3 == expected)
     // reliable-checkpoint knob must not change the answer
-    val dir = java.nio.file.Files.createTempDirectory("graft-lpa-ck").toString
+    val dir = tempDir("graft-lpa-ck")
     val got4 = Graph.labelPropagation(edges, iters = 5,
       checkpointDir = Some(dir), checkpointEvery = 2)
       .as[(String, String)].collect().toMap

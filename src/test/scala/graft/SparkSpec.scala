@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,6 +18,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
     tempDirs += dir
     dir.toString
+  }
+
+  /** Spark jobs started on this thread's job group while `f` runs. */
+  def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count")
+      try f finally sc.clearJobGroup()
+      org.apache.spark.SpecBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    n.get
   }
 
   // the session is shared and stopped by JVM exit; only temp dirs go here
