@@ -244,12 +244,22 @@ object SparkEntry {
     val cur = servedStores.get(key)
     if (cur != null) cur
     else {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-served-$store")
-        .toString + "/view"
+      val root = java.nio.file.Files.createTempDirectory(s"graft-served-$store").toFile
+      servedRoots.add(root)
+      val dir = root.toString + "/view"
       build(dir)
       val prev = servedStores.putIfAbsent(key, dir)
       if (prev != null) prev else dir
     }
+  }
+
+  /** Temp roots of the served stores, deleted at JVM exit: a store lives
+    * as long as the JVM that memoized it.
+    */
+  private lazy val servedRoots = {
+    val roots = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+    sys.addShutdownHook(roots.forEach(r => org.apache.commons.io.FileUtils.deleteQuietly(r)))
+    roots
   }
 
   /** One-time trained DeepWalk embedding store per sfDir — the exploded

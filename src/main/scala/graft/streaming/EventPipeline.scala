@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Classify
@@ -171,6 +172,25 @@ object EventPipeline {
     */
   private val Gate = "graft_gate"
 
+  /** The main table's partition column, `to_date(ts)`. */
+  private val Day = "day"
+
+  /** The data files of one spill side, each with its `day=` dir. */
+  private def spillFiles(fs: FileSystem, side: Path): Seq[(Path, Path)] =
+    fs.listStatus(side).toSeq.filter(_.isDirectory).flatMap { d =>
+      fs.listStatus(d.getPath).toSeq
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+        .map(f => d.getPath -> f.getPath)
+    }
+
+  /** Renames `from` to `to`, or throws. A local rename replaces an
+    * existing file without a word, so a taken target is an error too.
+    */
+  private def move(fs: FileSystem, from: Path, to: Path): Unit = {
+    if (fs.exists(to)) throw new java.io.IOException(s"gated import: $to already exists")
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"gated import: rename $from -> $to failed")
+  }
+
   /** One micro-batch of the complete-block-gated import — the reference's
     * full `import_from_staging()` contract (Persistence/ImportProcedure.cs):
     *
@@ -187,38 +207,52 @@ object EventPipeline {
     *
     * Job plan. `combined` (the batch plus the committed staging snapshot)
     * is persisted — a caller's batch may be a download that must not run
-    * twice — and every step below reads it or the spill, in four steps:
+    * twice — and every step below reads it or the spill. The spill is the
+    * call's only Spark write; the rest is one collect, one id pass and
+    * driver-side renames:
     *
     *  1. Summary: one grouped aggregate of `combined`, collected (one row
     *     per group of the batch and the snapshot): each group's distinct
     *     key count against its declared total, and its min/max key. The
     *     complete groups and the key range of the main-table check come
-    *     from this one collect.
+    *     from this one collect (3 jobs: the cache, the shuffle, the result).
     *  2. Spill: `combined` joined to the complete-group set — a broadcast
     *     relation, so a catch-up batch of 10^5 blocks plans as a live one
     *     does — tags each row `import` or `held`; one anti-join against
     *     the main table, read only inside the summary's key range, drops
     *     keys already imported from both sides; rows are deduplicated per
-    *     side by key and written once, partitioned by the tag, to
-    *     `stagingDir/spill`.
+    *     side by key and written once, in the batch's column order,
+    *     partitioned by the tag and by `day` (`to_date(ts)`), to
+    *     `stagingDir/spill` (4 jobs: two broadcasts, the shuffle, the
+    *     write).
     *  3. Feed: one `toLocalIterator` pass over the import side hands the
     *     ids to `onImported` in chunks of at most [[IdChunkSize]] and
-    *     gathers the landed groups for `onGroupsImported`.
-    *  4. Append: the import side is appended to `tableDir` (partitioned by
-    *     day); then `onGroupsImported` fires, and the held side gets its
-    *     `_SUCCESS` marker and is renamed to `v=<batchId>`, the new
-    *     committed snapshot; older snapshots and the spill are deleted.
+    *     gathers the landed groups for `onGroupsImported` (1 job;
+    *     [[ImportFeed.subscriber]] writes its chunks on the driver).
+    *  4. Move: the import side's files are renamed into
+    *     `tableDir/day=<d>/` — the spill already has the table's layout,
+    *     so there is no append job and no re-read; then `onGroupsImported`
+    *     fires. The held side's files are renamed out of their `day=` dirs
+    *     (the day goes into the file name: one write task names its files
+    *     alike in every dir), it gets its `_SUCCESS` marker and is renamed
+    *     to `v=<batchId>`, the new committed snapshot; older snapshots and
+    *     the spill are deleted. Every rename that fails, or whose target
+    *     exists, throws.
     *
     * Crash safety follows from that order. Every plan that reads
-    * `tableDir` runs in step 2, before the append (appending to a path a
-    * live plan reads would refresh its file index mid-scan). The feed
-    * leads the table: a crash after step 3 replays the batch, whose ids
-    * the feed already holds, and a replay after the append re-derives an
-    * empty import side. A crash before the rename leaves the previous
-    * `v=` snapshot committed — a new snapshot is written, then renamed,
-    * never overwritten in place — so held-back rows are never lost, and
-    * under Spark's at-least-once batch replay the main-table anti-join
-    * keeps the import idempotent.
+    * `tableDir` runs in step 2, before any file moves into it (adding
+    * files to a path a live plan reads would refresh its file index
+    * mid-scan). The feed leads the table: a crash after step 3 replays
+    * the batch, whose ids the feed already holds. A crash in the middle
+    * of the moves is the case of a crash in the middle of a committer's
+    * job commit: some files have landed, and the replay — which deletes
+    * the old spill first — re-derives an import side from which the
+    * anti-join drops what already landed; a group stays complete, since
+    * the summary counts `combined`, not the table. A crash before the
+    * snapshot rename leaves the previous `v=` snapshot committed — a new
+    * snapshot is written, then renamed, never overwritten in place — so
+    * held-back rows are never lost, and under Spark's at-least-once batch
+    * replay the main-table anti-join keeps the import idempotent.
     *
     * Scale: the summary and the landed groups are bounded by the groups of
     * one batch; ids reach the driver a chunk at a time; the main-table
@@ -231,9 +265,8 @@ object EventPipeline {
       declaredCol: String,
       onImported: (Long, Iterator[Long]) => Unit = NoOpOnImported,
       onGroupsImported: (Long, Iterator[Long]) => Unit = NoOpOnImported): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val staged = latestStagingVersion(spark, stagingDir) match {
       case Some(v) => spark.read.schema(batch.schema).parquet(s"$stagingDir/v=$v")
       case None => spark.createDataFrame(
@@ -263,36 +296,50 @@ object EventPipeline {
         else gated.join(spark.read.schema(batch.schema).parquet(tableDir)
           .where(col(key).between(bounds.min(keyOrder), bounds.max(keyOrder)))
           .select(key), Seq(key), "left_anti")
-      val spill = s"$stagingDir/spill"
-      fs.delete(new Path(spill), true) // a crashed call's leftovers
-      unseen.dropDuplicates(Gate, key).write.mode("overwrite").partitionBy(Gate).parquet(spill)
-      // 3. feed, then 4. append — both only when some group completed
-      val importSide = new Path(s"$spill/$Gate=import")
+      val spill = new Path(s"$stagingDir/spill")
+      fs.delete(spill, true) // a crashed call's leftovers
+      val deduped = unseen.dropDuplicates(Gate, key)
+      deduped.select(batch.columns.toSeq.map(deduped(_)) :+ deduped(Gate) :+
+          to_date(deduped("ts")).as(Day): _*)
+        .write.mode("overwrite").partitionBy(Gate, Day).parquet(spill.toString)
+      // 3. feed, then 4. move — both only when some group completed
+      val importSide = new Path(spill, s"$Gate=import")
       if (fs.exists(importSide)) {
-        val stable = spark.read.schema(batch.schema).parquet(importSide.toString)
-        val landed = broadcastIds(stable, batchId, key, onImported,
-          Option.when(onGroupsImported ne NoOpOnImported)(groupCol))
-        stable.withColumn("day", to_date(col("ts")))
-          .write.mode("append").partitionBy("day").parquet(tableDir)
+        val landed = broadcastIds(spark.read.schema(batch.schema).parquet(importSide.toString),
+          batchId, key, onImported, Option.when(onGroupsImported ne NoOpOnImported)(groupCol))
+        spillFiles(fs, importSide).foreach { case (dayDir, file) =>
+          val target = new Path(tableDir, dayDir.getName)
+          fs.mkdirs(target)
+          move(fs, file, new Path(target, file.getName))
+        }
         // the per-block "written" signal (Statistics.cs:24
-        // TrackBlockWritten), fired after the append so its duration
+        // TrackBlockWritten), fired after the move so its duration
         // covers the full enter→written arc; replays re-fire, which the
         // consumer's remove-once semantics absorb
         if (landed.nonEmpty) onGroupsImported(batchId, landed.iterator)
       }
-      // commit the held side as the new snapshot by rename (atomic), then
-      // prune older ones; with no held rows the snapshot is empty
-      val heldSide = new Path(s"$spill/$Gate=held")
+      // flatten the held side out of its day dirs (one write task names
+      // its file alike in every day dir, so the day goes into the name),
+      // commit it as the new snapshot by rename (atomic), then prune older
+      // ones; with no held rows the snapshot is empty
+      val heldSide = new Path(spill, s"$Gate=held")
       fs.mkdirs(heldSide)
+      spillFiles(fs, heldSide).groupBy(_._1).foreach { case (dayDir, files) =>
+        val day = dayDir.getName.stripPrefix(s"$Day=")
+        files.foreach { case (_, file) =>
+          move(fs, file, new Path(heldSide, s"part-$day-${file.getName.stripPrefix("part-")}"))
+        }
+        fs.delete(dayDir, true)
+      }
       fs.create(new Path(heldSide, "_SUCCESS"), true).close()
       val committed = new Path(s"$stagingDir/v=$batchId")
       fs.delete(committed, true) // replay leftovers
-      fs.rename(heldSide, committed)
+      move(fs, heldSide, committed)
       fs.listStatus(new Path(stagingDir)).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
         .filter(_.getPath.getName.stripPrefix("v=").toLong < batchId)
         .foreach(s => fs.delete(s.getPath, true))
-      fs.delete(new Path(spill), true)
+      fs.delete(spill, true)
       ()
     } finally { combined.unpersist(); () }
   }

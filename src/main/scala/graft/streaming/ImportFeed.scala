@@ -1,7 +1,16 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The queryable "recently imported" feed — the Spark-native stand-in for
   * the reference's websocket broadcast surface (the indexer NOTIFYs every
@@ -31,6 +40,16 @@ import org.apache.spark.sql.functions._
   * and the feed would permanently miss that batch — the feed must always
   * lead the table, never trail it.)
   *
+  * Chunk write: [[subscriber]] writes each chunk on the driver with
+  * parquet-hadoop — no Spark job, so the broadcast that follows it is not
+  * held up by a job's scheduling. The chunk goes to a hidden
+  * `.<name>.inprogress` file in its `b=<batchId>` dir and is renamed to
+  * `part-<uuid>.snappy.parquet` once its footer is written. A torn chunk
+  * is invisible: a writer that throws deletes its file, and one killed
+  * mid-write leaves only the hidden file, which Spark's file listing
+  * skips (names starting `.` or `_`); the poll reads with a fixed schema,
+  * so even a `b=` dir holding nothing visible reads as empty.
+  *
   * Scale shape: each append is one chunk of ≤ [[EventPipeline.IdChunkSize]]
   * ids (the hook's bound) — an 8-byte column, trivially small; readers prune
   * to the polled batch range before the dedup shuffle, so a years-deep feed
@@ -42,22 +61,49 @@ import org.apache.spark.sql.functions._
   */
 object ImportFeed {
 
-  /** An `onImported` subscriber that appends each id chunk to `dir`.
-    * Pass directly as the `onImported` argument of
-    * [[EventPipeline.startImport]] or `importGatedBatch`.
+  /** An `onImported` subscriber that appends each id chunk to `dir`,
+    * written on the driver (no Spark job). Pass directly as the
+    * `onImported` argument of [[EventPipeline.startImport]] or
+    * `importGatedBatch`.
     */
-  def subscriber(spark: SparkSession, dir: String): (Long, Iterator[Long]) => Unit =
-    (batchId, ids) => {
-      import spark.implicits._
-      // chunk is already materialized by the hook (≤ IdChunkSize), so this
-      // toSeq is bounded; the write is one small append into b=<batchId>,
-      // one file per chunk (coalesce merges the local partitions without
-      // the shuffle job a repartition would run)
-      ids.toSeq.toDF("event_id")
-        .withColumn("b", lit(batchId))
-        .coalesce(1)
-        .write.mode("append").partitionBy("b").parquet(dir)
+  def subscriber(spark: SparkSession, dir: String): (Long, Iterator[Long]) => Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    (batchId, ids) => if (ids.hasNext) writeChunk(conf, new Path(dir, s"b=$batchId"), ids)
+  }
+
+  /** The feed's file schema: one required 64-bit `event_id`. */
+  private val ChunkSchema = MessageTypeParser.parseMessageType(
+    "message spark_schema { required int64 event_id; }")
+
+  /** What the poll reads: `event_id` plus the `b` partition column. */
+  private val PollSchema = StructType(Seq(
+    StructField("event_id", LongType, nullable = false), StructField("b", LongType)))
+
+  /** One chunk as one parquet file in `partition`, written on the driver
+    * under a hidden name and renamed into view once complete.
+    */
+  private def writeChunk(conf: Configuration, partition: Path, ids: Iterator[Long]): Unit = {
+    val fs = partition.getFileSystem(conf)
+    val name = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
+    val inProgress = new Path(partition, s".$name.inprogress")
+    try {
+      val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(inProgress, conf))
+        .withType(ChunkSchema)
+        .withConf(conf)
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+        .build()
+      val rows = new SimpleGroupFactory(ChunkSchema)
+      try ids.foreach(id => writer.write(rows.newGroup().append("event_id", id))) finally writer.close()
+      val target = new Path(partition, name)
+      if (!fs.rename(inProgress, target))
+        throw new java.io.IOException(s"feed chunk: rename $inProgress -> $target failed")
+    } catch {
+      case t: Throwable =>
+        fs.delete(inProgress, false)
+        throw t
     }
+  }
 
   /** Directory name → feed batch id, None for anything that isn't a
     * well-formed `b=<long>` partition (a stray editor file or foreign dir
@@ -68,7 +114,9 @@ object ImportFeed {
 
   /** The poll: ids imported in batches ≥ `sinceBatch` (exclusive cut via
     * `sinceBatch + 1`). The `b` predicate prunes partitions before any IO;
-    * dedup makes replayed/torn chunks invisible. An empty feed — the dir
+    * dedup makes replayed chunks invisible, and the fixed read schema
+    * lets a `b=` dir that holds only an in-progress chunk read as empty.
+    * An empty feed — the dir
     * doesn't exist yet, or retention pruned every partition — returns a
     * schema-stable empty (batch_id, event_id) frame instead of failing
     * parquet schema inference on an empty root.
@@ -87,9 +135,9 @@ object ImportFeed {
     if (!hasData)
       spark.range(0).select(col("id").as("batch_id"), col("id").as("event_id"))
     else
-      spark.read.parquet(dir)
+      spark.read.schema(PollSchema).parquet(dir)
         .where(col("b") >= sinceBatch)
-        .select(col("b").cast("long").as("batch_id"), col("event_id"))
+        .select(col("b").as("batch_id"), col("event_id"))
         .dropDuplicates("batch_id", "event_id")
   }
 

@@ -270,6 +270,42 @@ class GatedImportSpec extends SparkSpec {
     assert(fi == Seq(Some(101L)))
   }
 
+  test("a batch across midnight: rows land in their day, held rows of both days survive") {
+    import org.apache.spark.sql.functions.{col, to_date}
+    val tableDir = tempDir("graft-gated-days-table")
+    val stagingDir = tempDir("graft-gated-days-staging")
+    def at(id: Long, block: Long, declared: Long, t: String) =
+      GatedRow(id, ts(t), block, declared, s"p$id")
+    // block 100 is complete across midnight; block 101 is held with one
+    // row on each day; block 102 is held with its only row on day 2
+    val batch = Seq(
+      at(1, 100, 2, "2024-01-01 23:59:00"), at(2, 100, 2, "2024-01-02 00:01:00"),
+      at(3, 101, 3, "2024-01-01 23:58:00"), at(4, 101, 3, "2024-01-02 00:02:00"),
+      at(5, 102, 2, "2024-01-02 00:03:00")).toDF()
+    EventPipeline.importGatedBatch(batch, 0L, tableDir, stagingDir,
+      groupCol = "block", declaredCol = "declared")
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    def tableIds = spark.read.parquet(tableDir).select("event_id").as[Long].collect().sorted.toSeq
+    def misplaced = spark.read.parquet(tableDir).where(col("day") =!= to_date(col("ts"))).count()
+    assert(tableIds == Seq(1L, 2L))
+    assert(misplaced == 0, "every table row sits in day = to_date(ts)")
+    assert(spark.read.parquet(tableDir).select(col("day").cast("string")).distinct()
+      .as[String].collect().sorted.toSeq == Seq("2024-01-01", "2024-01-02"))
+    val snapshot = spark.read.schema(batch.schema).parquet(s"$stagingDir/v=0")
+    assert(snapshot.columns.toSeq == batch.columns.toSeq, "the snapshot stays flat")
+    assert(snapshot.select("event_id").as[Long].collect().sorted.toSeq == Seq(3L, 4L, 5L),
+      "the held rows of both days survive")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$stagingDir/spill")), "the spill is gone")
+    // the next batch completes block 101 from the held rows of both days
+    EventPipeline.importGatedBatch(Seq(at(6, 101, 3, "2024-01-02 00:04:00")).toDF(), 1L,
+      tableDir, stagingDir, groupCol = "block", declaredCol = "declared")
+    assert(tableIds == Seq(1L, 2L, 3L, 4L, 6L))
+    assert(misplaced == 0)
+    assert(spark.read.schema(batch.schema).parquet(s"$stagingDir/v=1")
+      .select("event_id").as[Long].collect().toSeq == Seq(5L))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$stagingDir/spill")))
+  }
+
   test("a torn staging snapshot (no _SUCCESS) is ignored; held rows survive") {
     val tableDir = tempDir("graft-gated3-table")
     val stagingDir = tempDir("graft-gated3-staging")
@@ -291,7 +327,8 @@ class GatedImportSpec extends SparkSpec {
   /** Random gated-import batch sequences. Every sequence holds: groups cut
     * across batches, duplicate rows within and across batches, a final
     * batch re-sending rows whose blocks landed, a replayed batch id, empty
-    * batches, a key shared by two groups and a null group.
+    * batches, a key shared by two groups and a null group; each row's ts
+    * falls on one of two days.
     *
     * The shared key belongs to group `A`, whose rows arrive in one batch,
     * and to group `S`, which declares one row more than it can ever have.
@@ -301,8 +338,6 @@ class GatedImportSpec extends SparkSpec {
     * per-key dedup keeps, which neither implementation defines.
     */
   private val batchSequences: Gen[Seq[(Long, Seq[MaybeGroupedRow])]] = {
-    def r(id: Long, block: Option[Long], declared: Long) =
-      MaybeGroupedRow(id, ts("2024-01-01 10:00:00"), block, declared, s"p$id")
     for {
       declared <- Gen.listOfN(4, Gen.choose(1, 3))
       nNull <- Gen.choose(1, 2)
@@ -310,6 +345,10 @@ class GatedImportSpec extends SparkSpec {
       seed <- Gen.choose(0L, Long.MaxValue)
     } yield {
       val rng = new scala.util.Random(seed)
+      // rows fall on both sides of midnight, so one batch spans two days
+      val days = Seq(ts("2024-01-01 23:30:00"), ts("2024-01-02 00:30:00"))
+      def r(id: Long, block: Option[Long], declared: Long) =
+        MaybeGroupedRow(id, days(rng.nextInt(2)), block, declared, s"p$id")
       // groups 100..103; group 100 is A and arrives whole
       val groups = declared.zipWithIndex.map { case (d, j) =>
         val g = 100L + j

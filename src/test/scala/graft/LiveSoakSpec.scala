@@ -3,7 +3,6 @@ package graft
 import java.io.{BufferedReader, BufferedWriter, InputStreamReader, OutputStreamWriter}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.functions._
@@ -109,7 +108,7 @@ class LiveSoakSpec extends SparkSpec {
   }
 
   test("soak: 2000 blocks, two reorg reconnects, feed dedup, health end-to-end") {
-    val root = Files.createTempDirectory("livesoak").toFile.getAbsolutePath
+    val root = tempDir("livesoak")
     val (tableDir, stagingDir, feedDir, ckRoot) =
       (s"$root/table", s"$root/staging", s"$root/feed", s"$root/ck")
     val feed = new SoakFeed

@@ -3,7 +3,6 @@ package graft
 import java.io.{BufferedReader, BufferedWriter, InputStreamReader, OutputStreamWriter}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -67,8 +66,7 @@ class LiveSourceSpec extends SparkSpec {
     s"""{"block":$block,"event_id":$id,"ts_us":${baseUs + id * 1000000L},""" +
       s""""user_id":$user,"event_type":"$et","value":$value,"n_in_block":$n}"""
 
-  private def tmp(): String =
-    Files.createTempDirectory("livesrc").toFile.getAbsolutePath
+  private def tmp(): String = tempDir("livesrc")
 
   private def tableBlocks(tableDir: String): Map[Long, Set[Long]] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)

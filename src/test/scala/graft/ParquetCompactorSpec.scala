@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.ParquetCompactor
-import java.nio.file.Files
 
 class ParquetCompactorSpec extends SparkSpec {
   import spark.implicits._
@@ -13,7 +12,7 @@ class ParquetCompactorSpec extends SparkSpec {
   }
 
   test("compaction folds sliver files into sized files, content identical") {
-    val dir = Files.createTempDirectory("graft-compact").toString + "/corpus"
+    val dir = tempDir("graft-compact") + "/corpus"
     // 8 micro-batch appends at 4 partitions each → a pile of sliver files
     (0 until 8).foreach { b =>
       (0 until 100).map(i => (b * 100L + i, s"doc $b-$i text"))
@@ -39,7 +38,7 @@ class ParquetCompactorSpec extends SparkSpec {
 
   test("compactPartitionInPlace: folds one closed partition, content identical") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-inplace").toString
+    val root = tempDir("graft-inplace")
     val part = s"$root/day=2024-01-01"
     (0 until 3).foreach { i =>
       Seq((i * 10L, s"row$i")).toDF("id", "v").repartition(1)

@@ -3,7 +3,6 @@ package graft
 import graft.streaming.{EventPipeline, ReorgLoop}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
-import java.nio.file.Files
 
 case class ReorgEv(event_id: Long, ts: Timestamp, user_id: Long, event_type: String,
                    value: Double, props: String)
@@ -19,7 +18,7 @@ class ReorgLoopSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("day").parquet(dir)
 
   test("a mutated block triggers truncation + re-import from the OLDEST mismatch") {
-    val dir = Files.createTempDirectory("graft-reorg-loop").toString + "/table"
+    val dir = tempDir("graft-reorg-loop") + "/table"
     val chain = (1L to 20L).map(i => ev(i, (i / 8).toInt + 1))
     writeTable(dir, chain)
 
@@ -46,7 +45,7 @@ class ReorgLoopSpec extends SparkSpec {
   }
 
   test("a vanished tail block counts as a mismatch (shortened chain)") {
-    val dir = Files.createTempDirectory("graft-reorg-short").toString + "/table"
+    val dir = tempDir("graft-reorg-short") + "/table"
     writeTable(dir, (1L to 10L).map(i => ev(i, 1)))
     // the source no longer has block 10 at all
     val shorter = (1L to 9L).map(i => ev(i, 1))

@@ -132,7 +132,7 @@ class RpcRobustnessSpec extends SparkSpec {
     val node = new FlakyNode
     node.head.set(5L)
     node.failHttpNext.set(3) // the first head polls 503 (empty body)
-    val root = java.nio.file.Files.createTempDirectory("rpcflap").toFile.getAbsolutePath
+    val root = tempDir("rpcflap")
     val retriesBefore = graft.streaming.Metrics
       .counter("graft_rpc_retries_total", "").only.value
     try {
@@ -185,7 +185,7 @@ class RpcRobustnessSpec extends SparkSpec {
     val node = new FlakyNode
     val blocks = 2000L
     node.head.set(blocks)
-    val root = java.nio.file.Files.createTempDirectory("rpcsoak").toFile.getAbsolutePath
+    val root = tempDir("rpcsoak")
     val (tableDir, stagingDir) = (s"$root/table", s"$root/staging")
     val maxBuffered = 128
     try {
@@ -233,7 +233,7 @@ class RpcRobustnessSpec extends SparkSpec {
   test("repairGaps: detect -> download -> gated import as one operator (GapSource.cs arc)") {
     val node = new FlakyNode
     node.head.set(8L)
-    val root = java.nio.file.Files.createTempDirectory("rpcrepair").toFile.getAbsolutePath
+    val root = tempDir("rpcrepair")
     val tableDir = s"$root/table"
     try {
       // seed the table with blocks {1,2,5,8} through the same gated import
@@ -309,7 +309,7 @@ class RpcRobustnessSpec extends SparkSpec {
     }, "live-bp-feeder")
     feeder.setDaemon(true)
     feeder.start()
-    val root = java.nio.file.Files.createTempDirectory("livebp").toFile.getAbsolutePath
+    val root = tempDir("livebp")
     val maxBuffered = 64
     val endpoint = s"127.0.0.1:${server.getLocalPort}"
     try {

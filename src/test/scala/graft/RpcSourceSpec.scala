@@ -124,7 +124,7 @@ class RpcSourceSpec extends SparkSpec {
   test("graft-rpc: ordered catch-up, head-follow poll, bulk/interval metric split") {
     val node = new MockNode
     node.head.set(6L) // blocks 1..6 to catch up (over bulkThreshold 3 → bulk)
-    val root = java.nio.file.Files.createTempDirectory("rpcsrc").toFile.getAbsolutePath
+    val root = tempDir("rpcsrc")
     try {
       val rows = spark.readStream.format("graft-rpc")
         .option("url", node.url).option("fromBlock", 1L)
@@ -180,7 +180,7 @@ class RpcSourceSpec extends SparkSpec {
   test("graft-rpc: haltAtHead drains and idles; an RPC error fails the stream loudly") {
     val node = new MockNode
     node.head.set(3L)
-    val root = java.nio.file.Files.createTempDirectory("rpcsrc2").toFile.getAbsolutePath
+    val root = tempDir("rpcsrc2")
     try {
       val rows = spark.readStream.format("graft-rpc")
         .option("url", node.url).option("fromBlock", 1L)
@@ -275,7 +275,7 @@ class RpcSourceSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, xxhash64}
     val node = new MockNode
     node.head.set(8L)
-    val root = java.nio.file.Files.createTempDirectory("rpcimp").toFile.getAbsolutePath
+    val root = tempDir("rpcimp")
     val (tableDir, stagingDir) = (s"$root/table", s"$root/staging")
     val rows = spark.readStream.format("graft-rpc")
       .option("url", node.url).option("fromBlock", 1L)

@@ -5,7 +5,6 @@ import graft.sources.JdbcSink
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
-import java.nio.file.Files
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -18,8 +17,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming classify+dedup+import is exactly-once under duplicate input") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val tableDir = Files.createTempDirectory("graft-stream-table").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
+    val tableDir = tempDir("graft-stream-table")
+    val ckpt = tempDir("graft-stream-ckpt")
 
     val classified = EventPipeline.classifyStream(mem.toDF())
     val deduped = EventPipeline.dedupStream(classified)
@@ -51,8 +50,8 @@ class StreamingSpec extends SparkSpec {
 
   test("import stream resumes from checkpoint without duplicating imported rows") {
     implicit val sqlCtx = spark.sqlContext
-    val tableDir = Files.createTempDirectory("graft-restart-table").toString
-    val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
+    val tableDir = tempDir("graft-restart-table")
+    val ckpt = tempDir("graft-restart-ckpt")
 
     // phase 1: import events 0,1 then stop (simulated crash/redeploy)
     val mem1 = MemoryStream[Ev]
@@ -100,7 +99,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("reorg reimportFrom truncates the table at the reorg point") {
-    val tableDir = Files.createTempDirectory("graft-reorg-table").toString
+    val tableDir = tempDir("graft-reorg-table")
     Seq(
       (0L, ts("2024-01-01 10:00:00"), "a"),
       (1L, ts("2024-01-01 10:01:00"), "b"),
@@ -115,9 +114,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("live file source feeds the same pipeline as bulk (new files per batch)") {
-    val srcDir = Files.createTempDirectory("graft-live-src").toString
-    val outDir = Files.createTempDirectory("graft-live-out").toString
-    val ckpt = Files.createTempDirectory("graft-live-ckpt").toString
+    val srcDir = tempDir("graft-live-src")
+    val outDir = tempDir("graft-live-out")
+    val ckpt = tempDir("graft-live-ckpt")
     val mkBatch = (ids: Seq[Long], sub: String) =>
       ids.map(i => (i, ts(s"2024-01-01 10:0$i:00"), 1L, "purchase", 1.0, "{}"))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -137,7 +136,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("gap monitor re-requests missing key ranges after import") {
-    val dir = Files.createTempDirectory("graft-gapmon").toString
+    val dir = tempDir("graft-gapmon")
     Seq((0L, "a"), (1L, "b"), (4L, "c"), (7L, "d"))
       .toDF("event_id", "v").write.mode("overwrite").parquet(dir)
     var requested = Array.empty[(Long, Long)]

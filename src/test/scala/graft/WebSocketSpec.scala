@@ -156,7 +156,7 @@ class WebSocketSpec extends SparkSpec {
     // handshake succeeds, then silence: the frame read must hit the socket
     // SoTimeout and fail the stream with the same message as the TCP path
     val feed = new WsFeedServer((_, _) => Seq.empty)
-    val root = java.nio.file.Files.createTempDirectory("wsidle").toFile.getAbsolutePath
+    val root = tempDir("wsidle")
     try {
       val events = spark.readStream.format("graft-live")
         .option("host", "127.0.0.1").option("port", feed.port)
@@ -299,7 +299,7 @@ class WebSocketSpec extends SparkSpec {
     }, "ws-frag-feed")
     t.setDaemon(true)
     t.start()
-    val root = java.nio.file.Files.createTempDirectory("wsfrag").toFile.getAbsolutePath
+    val root = tempDir("wsfrag")
     try {
       val events = spark.readStream.format("graft-live")
         .option("host", "127.0.0.1").option("port", server.getLocalPort)
@@ -330,7 +330,7 @@ class WebSocketSpec extends SparkSpec {
     val feed = new WsFeedServer((_, from) => Seq(
       ev(from, from * 10, 2), ev(from, from * 10 + 1, 2),
       ev(from + 1, (from + 1) * 10, 1)))
-    val root = java.nio.file.Files.createTempDirectory("wslive").toFile.getAbsolutePath
+    val root = tempDir("wslive")
     try {
       val events = spark.readStream.format("graft-live")
         .option("host", "127.0.0.1").option("port", feed.port)
@@ -384,7 +384,7 @@ class WebSocketSpec extends SparkSpec {
     val sock = new Socket(InetAddress.getLoopbackAddress, bcast.boundPort)
     sock.setSoTimeout(60000)
     val seen = new ConcurrentLinkedQueue[String]()
-    val root = java.nio.file.Files.createTempDirectory("wsloop").toFile.getAbsolutePath
+    val root = tempDir("wsloop")
     val (tableDir, stagingDir, feedDir, ckRoot) =
       (s"$root/table", s"$root/staging", s"$root/feed", s"$root/ck")
     try {
