@@ -62,8 +62,8 @@ object Bench {
     // one-time build, which either skews its mean or — when a resweep
     // replaces the samples after the memo is already warm elsewhere —
     // leaks a build into the published median. Steady-state serve cost is
-    // what these keys exist to measure; build cost stays visible as the
-    // labeled ScaleProbe rows.
+    // what these keys exist to measure; build cost stays on record in the
+    // BENCH_NOTES.md 10x probe tables ("Round-11 10x probe rows").
     names.collect { case (n, fn) if SparkEntry.storeBackedKeys.contains(n) =>
       try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       catch { case _: Throwable => () } // the timed pass will record the failure

@@ -355,7 +355,8 @@ object SparkEntry {
   /** Queries that read a memoized per-sfDir store (trained embeddings,
     * IVF/text indexes, sketch/view stores). Bench PREWARMS these once
     * untimed so published medians report pure steady-state serve cost —
-    * the build is the labeled one-time cost (the 10× ScaleProbe rows),
+    * the build is the labeled one-time cost (BENCH_NOTES.md, "Round-11
+    * 10x probe rows"),
     * and without the prewarm run 1's build either skews the mean or, when
     * a resweep replaces the samples, leaks into the median itself.
     * Keys sharing a store (e.g. the \"days\" store) are all listed — the
@@ -449,19 +450,22 @@ object SparkEntry {
         if (b.isNullAt(0)) Seq.empty // empty input: nothing to lay out
         else {
           val (idHi, userHi) = (b.getLong(0), b.getLong(1))
-          val base = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-          Layout.zorderWrite(ev, "event_id", "user_id", s"$base/z", 16)
-          Layout.linearWrite(ev, "event_id", s"$base/l", 16)
-          def boxes(path: String, layout: String) = {
-            val (t, idBox) = Layout.pruningStats(s, path, "event_id", "user_id",
-              0L, idHi / 10, 0L, userHi)
-            val (_, userBox) = Layout.pruningStats(s, path, "event_id", "user_id",
-              0L, idHi, 0L, userHi / 10)
-            val (_, bothBox) = Layout.pruningStats(s, path, "event_id", "user_id",
-              0L, idHi / 10, 0L, userHi / 10)
-            (layout, t, idBox, userBox, bothBox)
-          }
-          Seq(boxes(s"$base/z", "zorder"), boxes(s"$base/l", "linear"))
+          val base = java.nio.file.Files.createTempDirectory("graft-zorder").toFile
+          // rows is an eager local Seq: both layouts are dead once it is built
+          try {
+            Layout.zorderWrite(ev, "event_id", "user_id", s"$base/z", 16)
+            Layout.linearWrite(ev, "event_id", s"$base/l", 16)
+            def boxes(path: String, layout: String) = {
+              val (t, idBox) = Layout.pruningStats(s, path, "event_id", "user_id",
+                0L, idHi / 10, 0L, userHi)
+              val (_, userBox) = Layout.pruningStats(s, path, "event_id", "user_id",
+                0L, idHi, 0L, userHi / 10)
+              val (_, bothBox) = Layout.pruningStats(s, path, "event_id", "user_id",
+                0L, idHi / 10, 0L, userHi / 10)
+              (layout, t, idBox, userBox, bothBox)
+            }
+            Seq(boxes(s"$base/z", "zorder"), boxes(s"$base/l", "linear"))
+          } finally org.apache.commons.io.FileUtils.deleteQuietly(base)
         }
       rows.toDF("layout", "files_total", "read_id_box", "read_user_box", "read_both")
         .orderBy("layout")
@@ -775,8 +779,9 @@ object SparkEntry {
     // frame memoizes to a parquet store per sfDir (the _served-keys
     // precedent — bench's median-of-3 reports the steady-state read the
     // embedding's consumers pay; run 1 pays the build; the 10× training
-    // cost is probed in ScaleProbe). Bit-deterministic training ⇒ the
-    // store is identical whichever call built it.
+    // cost is in BENCH_NOTES.md, "Round 8d probe additions").
+    // Bit-deterministic training ⇒ the store is identical whichever call
+    // built it.
     "q_node2vec" -> ((s, d) =>
       s.read.parquet(node2vecStore(s, d)).orderBy("node", "dim")),
     // graph → walks → SGNS vectors → IVF similarity search, END-TO-END in

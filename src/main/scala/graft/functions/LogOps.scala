@@ -21,8 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   && hexLong(strip0x(l.data)) ∈ [lo, hi]     (optional, the trust arm)
   *
   * Spark's higher-order `filter` is CodegenFallback — the lambda tree is
-  * interpreted per log per row, which DevRc measured at ~0.24s per
-  * filter per evaluation at sf0.1 (and classify evaluates five subsets).
+  * interpreted per log per row, measured at ~0.24s per filter per
+  * evaluation at sf0.1 (OPTIMIZATION_r15.md §2; classify evaluates five
+  * subsets).
   * This expression runs the same predicate imperatively inside
   * whole-stage codegen. Drop/keep semantics are bit-equal to the HOF
   * spelling (LogOpsSpec pins parity): a log whose predicate evaluates

@@ -532,16 +532,7 @@ object Dedup {
     */
   def dupClusters(pairs: DataFrame, maxIters: Int = 25,
                   checkpointDir: Option[String] = None,
-                  checkpointEvery: Int = 5): DataFrame =
-    dupClustersWithRounds(pairs, maxIters, checkpointDir, checkpointEvery)._1
-
-  /** [[dupClusters]] plus the ROUND COUNT it converged in (the
-    * [[graft.operators.Graph.temporalReachWithRounds]] probe surface —
-    * rounds ≈ largest cluster diameter + the empty confirming round).
-    */
-  def dupClustersWithRounds(pairs: DataFrame, maxIters: Int = 25,
-                  checkpointDir: Option[String] = None,
-                  checkpointEvery: Int = 5): (DataFrame, Int) = {
+                  checkpointEvery: Int = 5): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
     val cutRound = new java.util.concurrent.atomic.AtomicInteger(0)
     def cut(df: DataFrame): DataFrame =
@@ -608,8 +599,8 @@ object Dedup {
       labels = merged.select("id", "label")
     }
     edges.unpersist()
-    (labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-      .orderBy("doc_id"), i)
+    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+      .orderBy("doc_id")
   }
 
   /** Candidate-pair count of the prefix index under each token order —
@@ -953,11 +944,12 @@ object Dedup {
     // levenshtein (3-arg, Spark 3.5+) runs the banded O(maxDist·n) DP
     // with early exit instead of the full O(n·m) table; it returns -1
     // above maxDist, else the exact distance — same predicate, same
-    // surviving distances (oracle hash identical). DevLev in-JVM A/B:
-    // the sweep drops 1.04s → 0.71s at sf0.1; a length-bucket blocking
-    // refinement (probe ±1 width-(k+1) bucket) measured NEUTRAL on top —
-    // the length-difference conjunct below already kills those pairs
-    // before the DP, so the simpler spelling stays.
+    // surviving distances (oracle hash identical). In-JVM A/B
+    // (OPTIMIZATION_r15.md §3): the sweep drops 1.04s → 0.71s at sf0.1;
+    // a length-bucket blocking refinement (probe ±1 width-(k+1) bucket)
+    // measured NEUTRAL on top — the length-difference conjunct below
+    // already kills those pairs before the DP, so the simpler spelling
+    // stays.
     b.as("a").join(b.as("b"),
         col("a.blk") === col("b.blk") && col("a.k") < col("b.k") &&
           // |len(a)−len(b)| is a levenshtein lower bound: prune before

@@ -1257,19 +1257,7 @@ object Graph {
   def temporalReach(edges: DataFrame, seeds: DataFrame,
                     startTs: Long = Long.MinValue, maxIters: Int = 100,
                     checkpointDir: Option[String] = None,
-                    checkpointEvery: Int = 5): DataFrame =
-    temporalReachWithRounds(edges, seeds, startTs, maxIters,
-      checkpointDir, checkpointEvery)._1
-
-  /** [[temporalReach]] plus the ROUND COUNT it converged in — the probe
-    * surface that pins the cost envelope (rounds ≈ temporal diameter of
-    * the seed set's reachable region, never |E|; the last round is the
-    * empty confirming one).
-    */
-  def temporalReachWithRounds(edges: DataFrame, seeds: DataFrame,
-                    startTs: Long = Long.MinValue, maxIters: Int = 100,
-                    checkpointDir: Option[String] = None,
-                    checkpointEvery: Int = 5): (DataFrame, Int) = {
+                    checkpointEvery: Int = 5): DataFrame = {
     val sc = edges.sparkSession.sparkContext
     val cutRound = new java.util.concurrent.atomic.AtomicInteger(0)
     def cut(df: DataFrame): DataFrame =
@@ -1316,7 +1304,7 @@ object Graph {
       s"temporalReach: did not converge within maxIters=$maxIters " +
         "(temporal diameter exceeds the budget)")
     e.unpersist()
-    (arr.select(col("node"), col("arrival").as("arrival_us")).orderBy("node"), it)
+    arr.select(col("node"), col("arrival").as("arrival_us")).orderBy("node")
   }
 
   /** Deterministic RANDOM-WALK table — the DeepWalk/node2vec corpus

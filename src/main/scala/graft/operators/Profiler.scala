@@ -161,9 +161,10 @@ object Profiler {
     // elimination across the agg expressions (conditional branches are
     // only lazily CSE'd), so every one of the 10 per-pair aggregates
     // re-evaluated the double→decimal casts per row — measured 4.5 s vs
-    // 1.5 s on the sf0.1 lineitem for this exact 3-column query (the
-    // corr_arms probe in ScaleProbe). Projecting the guarded columns once
-    // per pair and aggregating plain attribute references keeps the sums
+    // 1.5 s on the sf0.1 lineitem for this exact 3-column query
+    // (BENCH_NOTES.md, Round 10 "q_correlation root cause"). Projecting
+    // the guarded columns once per pair and aggregating plain attribute
+    // references keeps the sums
     // BIT-IDENTICAL (same values enter the same decimal/double sums in
     // the same order) while the guard + cast run once per row.
     val proj = pairs.zipWithIndex.flatMap { case ((a, b), p) =>

@@ -105,10 +105,10 @@ object ReceiptClassifier {
     graft.functions.LogOps.filterLogs(logs, topic)
 
   // r15: the filter(logs, l => ...) HOF spellings below are CodegenFallback
-  // (interpreted per log per row — DevRc measured ~0.24s per filter per
-  // evaluation at sf0.1, and classify computes five subsets); each swaps to
-  // the one-pass codegen'd kernel with the SAME drop/keep semantics
-  // (LogOpsSpec pins parity against the HOF spellings).
+  // (interpreted per log per row — ~0.24s per filter per evaluation at
+  // sf0.1, OPTIMIZATION_r15.md §2, and classify computes five subsets);
+  // each swaps to the one-pass codegen'd kernel with the SAME drop/keep
+  // semantics (LogOpsSpec pins parity against the HOF spellings).
   private def trustLogs(logs: Column, hub: String): Column =
     graft.functions.LogOps.filterLogs(logs, CrcTrustTopic, Some(hub), 3,
       Some((0L, 100L)))

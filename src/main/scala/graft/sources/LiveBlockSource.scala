@@ -6,15 +6,13 @@ import java.nio.charset.StandardCharsets
 import java.util
 
 import scala.collection.concurrent.TrieMap
-import scala.collection.mutable.ArrayBuffer
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -198,59 +196,27 @@ private[sources] class LiveBlockTable(options: CaseInsensitiveStringMap)
     }
 }
 
-private[sources] case class LiveOffset(v: Long) extends Offset {
-  override def json(): String = v.toString
-}
-
 private[sources] class LiveBlockMicroBatchStream(
     host: String, port: Int, subscribeFrom: Long, idleTimeoutMs: Int,
     failOnGap: Boolean, numPartitions: Int, healthKey: Option[String],
     transport: String = "tcp", maxBufferedRows: Int = 100000,
     maxRetries: Int = 3, retryBaseMs: Long = 1000L)
-  extends MicroBatchStream {
+  extends BufferedMicroBatchStream[LiveRow](
+    numPartitions, maxBufferedRows,
+    graft.streaming.Metrics.gauge(
+      "graft_live_buffer_high_water_rows",
+      "Highest catch-up buffer fill observed by the live source.",
+      "endpoint").labels(s"$host:$port"),
+    r => new GenericInternalRow(Array[Any](
+      r.block, r.eventId, r.tsUs, r.userId,
+      UTF8String.fromString(r.eventType), r.value,
+      UTF8String.fromString(r.props), r.nInBlock))) {
 
-  private val lock = new Object
-  private val buffer = new ArrayBuffer[LiveRow]
-  private var baseOffset = 0L
-  @volatile private var failure: Throwable = _
-  @volatile private var stopped = false
   private val health = healthKey.map(LiveBlockSource.healthFor)
   private val blocksMetric = graft.streaming.Metrics.counter(
     "graft_live_blocks_total", "Blocks announced by the live source.", "source")
   private val rowsMetric = graft.streaming.Metrics.counter(
     "graft_live_rows_total", "Event rows admitted by the live source.")
-  private val bufferHighWater = graft.streaming.Metrics.gauge(
-    "graft_live_buffer_high_water_rows",
-    "Highest catch-up buffer fill observed by the live source.",
-    "endpoint").labels(s"$host:$port")
-
-  /** Highest offset handed to a micro-batch via [[planInputPartitions]] —
-    * the backpressure valve's drain signal. Guarded by `lock`.
-    */
-  private var servedOffset = 0L
-
-  /** BACKPRESSURE (r12 verdict — the Akka-Streams property the port had
-    * dropped): the reader blocks once `maxBufferedRows` rows await being
-    * SERVED to a micro-batch. Blocking the reader thread IS the valve —
-    * it stops draining the socket, the TCP window fills, and the
-    * server-side replay pauses, exactly how a backpressured subscription
-    * pushes back on a deep catch-up replay. The valve counts UNSERVED
-    * rows, not uncommitted ones: Spark defers `commit(N)` until it
-    * constructs batch N+1, so gating on commit would deadlock the stream
-    * at exactly `maxBufferedRows` (no new data ⇒ no next batch ⇒ no
-    * commit — caught by the r13 backpressure soak); total fill stays
-    * bounded at ~2× the valve. `planInputPartitions`/`commit`/`stop`
-    * notify.
-    */
-  private def appendBackpressured(row: LiveRow): Unit = lock.synchronized {
-    while (baseOffset + buffer.length - servedOffset >= maxBufferedRows &&
-           !stopped && failure == null)
-      lock.wait(100)
-    if (!stopped) {
-      buffer += row
-      bufferHighWater.set(math.max(bufferHighWater.value, buffer.length.toDouble))
-    }
-  }
 
   @volatile private var socket: Socket = _
   private val mapper = new ObjectMapper()
@@ -323,7 +289,7 @@ private[sources] class LiveBlockMicroBatchStream(
               props = if (node.has("props")) node.get("props").asText() else "{}",
               nInBlock = node.get("n_in_block").asLong())
             rowsMetric.only.inc()
-            appendBackpressured(row)
+            appendBackpressured(row :: Nil)
           }
           // a healthy line closes the penalty arc (reset-on-success)
           attempt = 0
@@ -412,71 +378,10 @@ private[sources] class LiveBlockMicroBatchStream(
   reader.setDaemon(true)
   reader.start()
 
-  override def initialOffset(): Offset = LiveOffset(0L)
-  override def deserializeOffset(json: String): Offset = LiveOffset(json.toLong)
-
-  override def latestOffset(): Offset = {
-    val f = failure
-    if (f != null) throw f
-    lock.synchronized { LiveOffset(baseOffset + buffer.length) }
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s, e) = (start.asInstanceOf[LiveOffset].v, end.asInstanceOf[LiveOffset].v)
-    val rows = lock.synchronized {
-      servedOffset = math.max(servedOffset, e)
-      lock.notifyAll() // served rows no longer count against the valve
-      // clamp defensively: a restart against a stale checkpoint may ask
-      // for offsets this (fresh, non-replayable) connection never buffered
-      val from = math.max(s - baseOffset, 0L).toInt
-      val until = math.min(math.max(e - baseOffset, 0L), buffer.length.toLong).toInt
-      if (from >= until) Array.empty[LiveRow]
-      else buffer.slice(from, until).toArray
-    }
-    if (rows.isEmpty) Array.empty
-    else {
-      val n = math.max(1, math.min(numPartitions, rows.length))
-      rows.grouped((rows.length + n - 1) / n)
-        .map(g => LiveInputPartition(g): InputPartition).toArray
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = new LiveReaderFactory
-
-  override def commit(end: Offset): Unit = lock.synchronized {
-    val e = end.asInstanceOf[LiveOffset].v
-    val drop = math.min(math.max(e - baseOffset, 0L), buffer.length.toLong).toInt
-    buffer.remove(0, drop)
-    baseOffset = math.max(baseOffset, e)
-    lock.notifyAll() // wake a reader blocked on the backpressure valve
-  }
-
   override def stop(): Unit = {
-    stopped = true
-    lock.synchronized { lock.notifyAll() }
+    super.stop()
     val s = socket
     if (s != null) { try s.close() catch { case _: java.io.IOException => } }
     reader.interrupt() // wake a retry arm sleeping in its backoff
-  }
-}
-
-private[sources] final case class LiveInputPartition(rows: Array[LiveRow])
-  extends InputPartition
-
-private[sources] class LiveReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val rows = partition.asInstanceOf[LiveInputPartition].rows
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = {
-        val r = rows(i)
-        new GenericInternalRow(Array[Any](
-          r.block, r.eventId, r.tsUs, r.userId,
-          UTF8String.fromString(r.eventType), r.value,
-          UTF8String.fromString(r.props), r.nInBlock))
-      }
-      override def close(): Unit = ()
-    }
   }
 }

@@ -215,7 +215,7 @@ class AnnSpec extends SparkSpec {
   test("ivf index: materialized store reproduces the inline path, scan prunes to probed cids")(withoutAqe {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-index").toString
+    val dir = tempDir("graft-ivf-index")
     Ann.buildIvfIndex(emb, dir, numCentroids = 8, numQueries = 5)
     // queries as a local relation: every FILE scan in the plan must then
     // belong to the index store — the base table is never touched
@@ -289,8 +289,8 @@ class AnnSpec extends SparkSpec {
   test("ivf incremental append == one-shot build over the union (frozen seeds)") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.where($"vec_id" < 5)
-    val dirA = java.nio.file.Files.createTempDirectory("ivf-oneshot").toString
-    val dirB = java.nio.file.Files.createTempDirectory("ivf-incr").toString
+    val dirA = tempDir("ivf-oneshot")
+    val dirB = tempDir("ivf-incr")
     // one-shot over everything; seed centroids = first 16 base vectors
     Ann.buildIvfIndex(emb, dirA, numCentroids = 16, numQueries = 5)
     // incremental: build on an id prefix (contains the same 16 seeds),
@@ -322,7 +322,7 @@ class AnnSpec extends SparkSpec {
 
   test("drift-gated maintenance: undrifted appends keep frozen centroids, drift rebuilds atomically") {
     import graft.sources.ParquetCompactor
-    val dir = java.nio.file.Files.createTempDirectory("ivf-drift").toString + "/idx"
+    val dir = tempDir("ivf-drift") + "/idx"
     def mk(ids: Range, shift: Float) = ids.map { i =>
       // jitter keyed on i % 20 so every batch draws the SAME distribution
       // (an id-proportional term would smuggle drift into the id range);
@@ -403,7 +403,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfTopKFromIndex excludeSelf: self filtered BEFORE ranking under cosine ties") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf-self").toString + "/idx"
+    val dir = tempDir("ivf-self") + "/idx"
     // 8 identical vectors: every pair ties at cosine 1.0, ties break on
     // smaller nid — so query id 7's self-hit ranks LAST and a post-rank
     // filter over k results would never drop it (the q_graph_ann defect:
@@ -522,7 +522,7 @@ class AnnSpec extends SparkSpec {
     val rep = Ann.labelPropagation(emb.repartition(5), seeds, k = 3, iters = 4)
       .as[(Long, String, Boolean)].collect().toSeq
     assert(rep == r.toSeq)
-    val ck = java.nio.file.Files.createTempDirectory("graft-lp-ck").toString
+    val ck = tempDir("graft-lp-ck")
     val knob = Ann.labelPropagation(emb, seeds, k = 3, iters = 4,
       checkpointDir = Some(ck), checkpointEvery = 2)
       .as[(Long, String, Boolean)].collect().toSeq
@@ -693,7 +693,7 @@ class AnnSpec extends SparkSpec {
     def run(df: org.apache.spark.sql.DataFrame) =
       Ann.kCenterSample(df, k = 6).collect().map(_.toSeq).toSeq
     assert(run(emb) == run(emb.repartition(7)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-kcenter-ck").toString
+    val dir = tempDir("graft-kcenter-ck")
     assert(Ann.kCenterSample(emb, k = 6, checkpointDir = Some(dir), checkpointEvery = 2)
       .collect().map(_.toSeq).toSeq == run(emb))
     // k larger than the corpus: returns everything, then stops
@@ -835,7 +835,7 @@ class AnnSpec extends SparkSpec {
     val ids = emb.select(
       (row_number().over(Window.orderBy("node")) - 1).cast("long").as("vec_id"),
       col("node"), col("embedding").cast("array<float>").as("embedding"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-graph-ann").toString
+    val dir = tempDir("graft-graph-ann")
     Ann.buildIvfIndex(ids.select("vec_id", "embedding"), dir,
       numCentroids = 4, numQueries = 0)
     val queries = ids.select("vec_id", "embedding")

@@ -2,7 +2,6 @@ package graft
 
 import graft.sources.BucketedStore
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class BucketedStoreSpec extends SparkSpec {
 
@@ -12,7 +11,7 @@ class BucketedStoreSpec extends SparkSpec {
   }
 
   test("bucketed tables join without shuffling the join key") {
-    val dir = Files.createTempDirectory("graft-bucketed").toString
+    val dir = tempDir("graft-bucketed")
     val src = "/root/testdata/sf0.001"
     val li = spark.read.parquet(s"$src/lineitem.parquet")
     val ord = spark.read.parquet(s"$src/orders.parquet")

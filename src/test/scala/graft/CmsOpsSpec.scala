@@ -78,7 +78,7 @@ class CmsOpsSpec extends SparkSpec {
   }
 
   test("maintained CMS store converges byte-identically to the one-shot table") {
-    val viewDir = java.nio.file.Files.createTempDirectory("graft-cms-store").toString + "/view"
+    val viewDir = tempDir("graft-cms-store") + "/view"
     (0 until 3).foreach { i =>
       graft.streaming.ViewMaintenance.mergeFreqSketchesBatch(spark,
         items.where(pmod(xxhash64($"term"), lit(3)) === i),

@@ -214,7 +214,7 @@ class CorpusPipelineSpec extends SparkSpec {
   test("video corpus stream: real MJPEG AVIs curate, near-dups drop by frame dHash, replay no-ops") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.ViewMaintenance
-    val base = java.nio.file.Files.createTempDirectory("graft-video-corpus").toString
+    val base = tempDir("graft-video-corpus")
     val (corpusDir, storeDir, ckpt) = (s"$base/corpus", s"$base/sigs", s"$base/ckpt")
 
     // v1: 3-frame MJPEG AVI; v4: garbage payload (quarantine);
@@ -280,7 +280,7 @@ class CorpusPipelineSpec extends SparkSpec {
   test("image corpus stream: cross-FORMAT re-encodes drop by dHash, replay no-ops") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.ViewMaintenance
-    val base = java.nio.file.Files.createTempDirectory("graft-image-corpus").toString
+    val base = tempDir("graft-image-corpus")
     val (corpusDir, storeDir, ckpt) = (s"$base/corpus", s"$base/sigs", s"$base/ckpt")
     def rgbOf(img: java.awt.image.BufferedImage): Array[Byte] =
       Array.tabulate[Byte](img.getWidth * img.getHeight * 3) { i =>
@@ -359,7 +359,7 @@ class CorpusPipelineSpec extends SparkSpec {
   test("audio corpus stream: requantized cross-batch copies drop by window print, replay no-ops") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.ViewMaintenance
-    val base = java.nio.file.Files.createTempDirectory("graft-audio-corpus").toString
+    val base = tempDir("graft-audio-corpus")
     val (corpusDir, storeDir, ckpt) = (s"$base/corpus", s"$base/prints", s"$base/ckpt")
 
     // a1: PCM16 take; a2: the SAME take REQUANTIZED to PCM8 — zero byte

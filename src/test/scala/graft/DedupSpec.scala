@@ -324,7 +324,7 @@ class DedupSpec extends SparkSpec {
       (11L, nearText),   // near-dup → most bands collide
       (12L, (1 to 60).map(i => s"qqq$i").mkString(" "))) // disjoint vocab
       .toDF("doc_id", "text")
-    val viewDir = java.nio.file.Files.createTempDirectory("graft-band-store").toString + "/view"
+    val viewDir = tempDir("graft-band-store") + "/view"
     graft.streaming.ViewMaintenance.mergeBandHashesBatch(spark, history, viewDir,
       numBuckets = 4, version = 0L)
     val seen = graft.streaming.ViewMaintenance.readView(spark, viewDir)
@@ -340,7 +340,7 @@ class DedupSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def gateAfter(slices: Seq[org.apache.spark.sql.DataFrame]): Map[Long, Boolean] = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-band-slice").toString + "/view"
+      val dir = tempDir("graft-band-slice") + "/view"
       slices.zipWithIndex.foreach { case (s, i) =>
         graft.streaming.ViewMaintenance.mergeBandHashesBatch(spark, s, dir,
           numBuckets = 4, version = i.toLong)
@@ -355,7 +355,7 @@ class DedupSpec extends SparkSpec {
       docs.where(col("doc_id") % 3 === 1)))
     val oneShot = gateAfter(Seq(history))
     // replaying a committed version is a no-op
-    val replayDir = java.nio.file.Files.createTempDirectory("graft-band-replay").toString + "/view"
+    val replayDir = tempDir("graft-band-replay") + "/view"
     graft.streaming.ViewMaintenance.mergeBandHashesBatch(spark, history, replayDir,
       numBuckets = 4, version = 0L)
     graft.streaming.ViewMaintenance.mergeBandHashesBatch(spark, history, replayDir,

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Every query must be total: empty partitions are routine at 100 TB
   * (fresh dates, pruned-out splits), and an operator that throws on an
   * empty group/table poisons whole jobs.
@@ -9,7 +7,7 @@ import java.nio.file.Files
 class EmptyInputSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val dir = Files.createTempDirectory("graft-empty-sf").toString
+    val dir = tempDir("graft-empty-sf")
     val src = "/root/testdata/sf0.001"
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>

@@ -27,7 +27,7 @@ class LayoutSpec extends SparkSpec {
     val rnd = new scala.util.Random(9)
     val df = Seq.fill(20000)((rnd.nextInt(10000).toLong, rnd.nextInt(10000).toLong))
       .toDF("x", "y")
-    val base = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val base = tempDir("graft-layout")
     Layout.zorderWrite(df, "x", "y", s"$base/z", 32)
     Layout.linearWrite(df, "x", s"$base/l", 32)
 
@@ -55,9 +55,20 @@ class LayoutSpec extends SparkSpec {
 
   test("zorderWrite round-trips rows unchanged and handles constant dims") {
     val df = Seq((1L, 5L), (2L, 5L), (3L, 5L)).toDF("x", "y")
-    val p = java.nio.file.Files.createTempDirectory("graft-layout2").toString + "/c"
+    val p = tempDir("graft-layout2") + "/c"
     Layout.zorderWrite(df, "x", "y", p, 2) // y is constant → lane 0
     val back = spark.read.parquet(p).as[(Long, Long)].collect().toSet
     assert(back == Set((1L, 5L), (2L, 5L), (3L, 5L)))
+  }
+
+  test("q_zorder_stats leaves no layout dirs behind in the temp dir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def zorderDirs() =
+      Option(tmp.list()).toSeq.flatten.filter(_.startsWith("graft-zorder")).toSet
+    val before = zorderDirs()
+    val rows = SparkEntry.queries("q_zorder_stats")(spark, "/root/testdata/sf0.001").collect()
+    assert(rows.map(_.getString(0)).toSeq == Seq("linear", "zorder"))
+    val leaked = zorderDirs() -- before
+    assert(leaked.isEmpty, s"q_zorder_stats leaked $leaked")
   }
 }

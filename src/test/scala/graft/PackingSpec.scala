@@ -54,7 +54,7 @@ class PackingSpec extends SparkSpec {
   test("writeShards: one file per shard, deterministic order, partition-invariant") {
     import org.apache.spark.sql.functions._
     val docs = spark.range(0, 500).select(col("id").as("doc_id"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString + "/s"
+    val dir = tempDir("graft-shards") + "/s"
     assert(Packing.writeShards(docs, "doc_id", dir, nShards = 4) == 500L)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val shardDirs = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
@@ -73,7 +73,7 @@ class PackingSpec extends SparkSpec {
     assert(shardRows(1) == expected, "file order == deterministic hash order")
     // rewriting from a differently-partitioned input reproduces the bytes'
     // row order exactly
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-shards2").toString + "/s"
+    val dir2 = tempDir("graft-shards2") + "/s"
     Packing.writeShards(docs.repartition(13), "doc_id", dir2, nShards = 4)
     (0 until 4).foreach { n =>
       assert(shardRows(n) ==

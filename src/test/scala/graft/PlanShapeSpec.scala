@@ -8,7 +8,8 @@ import graft.operators.Retrieval
   * against the ACTUAL physical plan at sf0.001, so a refactor that silently
   * trades a broadcast for a shuffle — or widens a scan to all columns —
   * fails a test instead of a cluster budget. (Per-operator shape notes live
-  * in SURVEY §5; dedicated audits in PlanAudit.scala.)
+  * in SURVEY §5 and the "Plan audit" records in BENCH_NOTES.md;
+  * `Explain <sfDir> <key…>` dumps any key's plan.)
   */
 class PlanShapeSpec extends SparkSpec {
 

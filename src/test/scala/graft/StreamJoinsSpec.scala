@@ -19,7 +19,7 @@ class StreamJoinsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val clicks = MemoryStream[JEv]
     val views = MemoryStream[JEv]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ssj").toString
+    val ckpt = tempDir("graft-ssj")
 
     val joined = StreamJoins.attributeWithin(
       clicks.toDF(), views.toDF(), "user_id", H)
@@ -61,7 +61,7 @@ class StreamJoinsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val clicks = MemoryStream[JEv]
     val views = MemoryStream[JEv]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ssj-late").toString
+    val ckpt = tempDir("graft-ssj-late")
     val q = StreamJoins.attributeWithin(clicks.toDF(), views.toDF(), "user_id", H,
       delay = "5 minutes")
       .writeStream.format("memory").queryName("ssj_late")

@@ -10,7 +10,7 @@ class TextIndexSpec extends SparkSpec {
   private lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
   private def freshIndex(numBuckets: Int = 16): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-text-index").toString
+    val dir = tempDir("graft-text-index")
     TextIndex.buildTextIndex(docs, dir, numBuckets)
     dir
   }
@@ -64,7 +64,7 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("incremental append: build+appends == one-shot over the union, replays are no-ops") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-text-append").toString
+    val dir = tempDir("graft-text-append")
     TextIndex.buildTextIndex(docs.where($"doc_id" % 3 === 0), dir, 16)
     TextIndex.appendTextBatch(docs.where($"doc_id" % 3 === 1), dir, batchId = 1L)
     TextIndex.appendTextBatch(docs.where($"doc_id" % 3 === 2), dir, batchId = 2L)
@@ -88,7 +88,7 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("compaction folds closed generations, replays no-op, appends continue, rebuild resets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-text-compact").toString
+    val dir = tempDir("graft-text-compact")
     TextIndex.buildTextIndex(docs.where($"doc_id" % 3 === 0), dir, 16)
     TextIndex.appendTextBatch(docs.where($"doc_id" % 3 === 1), dir, batchId = 1L)
     val terms = Seq("dup", "spark", "merge")
@@ -128,7 +128,7 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("empty corpus builds an empty but queryable index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-text-index-empty").toString
+    val dir = tempDir("graft-text-index-empty")
     TextIndex.buildTextIndex(docs.where(lit(false)), dir, 8)
     assert(TextIndex.bm25FromIndex(spark, dir, Seq("dup")).collect().isEmpty)
     assert(TextIndex.phraseDocsFromIndex(spark, dir, Seq("a", "b"))
@@ -143,7 +143,7 @@ class TextIndexSpec extends SparkSpec {
       (4L, "x x x"),         // repeated-term phrase territory
       (5L, "b b a")          // "a b" absent ("b" precedes)
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-phrase").toString
+    val dir = tempDir("graft-phrase")
     TextIndex.buildTextIndex(hand, dir, 8)
     val ab = TextIndex.phraseDocsFromIndex(spark, dir, Seq("a", "b"))
       .as[(Long, Long)].collect().toMap
@@ -169,7 +169,7 @@ class TextIndexSpec extends SparkSpec {
       (4L, "a x b x a"),        // pairs: (0,2)=2, (4,2)=2 → 2 pairs at w=2
       (5L, "a a a")             // termB absent
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-prox").toString
+    val dir = tempDir("graft-prox")
     TextIndex.buildTextIndex(hand, dir, 8)
     def near(w: Int) = TextIndex.proximityDocsFromIndex(spark, dir, "a", "b", w)
       .as[(Long, Long)].collect().toMap
@@ -223,7 +223,7 @@ class TextIndexSpec extends SparkSpec {
       TextIndex.booleanDocsFromIndex(spark, dir, Nil, Nil, Seq("dup"))
     }
     // empty index: schema-stable empty
-    val emptyDir = java.nio.file.Files.createTempDirectory("graft-text-bool").toString
+    val emptyDir = tempDir("graft-text-bool")
     TextIndex.buildTextIndex(docs.where(org.apache.spark.sql.functions.lit(false)), emptyDir, 8)
     val e = TextIndex.booleanDocsFromIndex(spark, emptyDir, Seq("scan"))
     assert(e.collect().isEmpty)

@@ -4,7 +4,6 @@ import graft.streaming.ViewMaintenance
 import graft.streaming.ViewMaintenance.{mergeTrustBatch, readView}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 case class TrustEv(hash: String, user: String, can_send_to: String, limit: Long)
 
@@ -18,8 +17,8 @@ class ViewMaintenanceSpec extends SparkSpec {
 
   test("trust view merges micro-batch deltas: latest wins, history accumulates") {
     implicit val sqlCtx = spark.sqlContext
-    val viewDir = Files.createTempDirectory("graft-trustview").toString + "/view"
-    val ckpt = Files.createTempDirectory("graft-trustview-ckpt").toString
+    val viewDir = tempDir("graft-trustview") + "/view"
+    val ckpt = tempDir("graft-trustview-ckpt")
 
     val mem = MemoryStream[TrustEv]
     val q = ViewMaintenance.startTrustView(mem.toDF(), viewDir, ckpt)
@@ -43,7 +42,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("a batch touching one key writes one bucket into the new generation") {
-    val viewDir = Files.createTempDirectory("graft-bucketed").toString + "/view"
+    val viewDir = tempDir("graft-bucketed") + "/view"
     // seed: 32 users spread over the bucket space
     val seed = (1 to 32).map(i => TrustEv(f"0xs$i%02d", s"u$i", "v", 10L))
     mergeTrustBatch(spark, seed.toDF, viewDir, numBuckets = 16)
@@ -76,7 +75,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("a crash before manifest commit leaves the torn generation invisible") {
-    val viewDir = Files.createTempDirectory("graft-torn").toString + "/view"
+    val viewDir = tempDir("graft-torn") + "/view"
     mergeTrustBatch(spark, Seq(TrustEv("0xa1", "u1", "v1", 10L)).toDF, viewDir, version = 0L)
     val preCrash = viewState(viewDir)
 
@@ -97,7 +96,7 @@ class ViewMaintenanceSpec extends SparkSpec {
 
   test("conditional-PUT committer: same end-to-end view state as rename") {
     import graft.streaming.ConditionalPutCommitter
-    val viewDir = Files.createTempDirectory("graft-casview").toString + "/view"
+    val viewDir = tempDir("graft-casview") + "/view"
     mergeTrustBatch(spark, Seq(TrustEv("0xa1", "u1", "v1", 10L)).toDF, viewDir,
       version = 0L, committer = ConditionalPutCommitter)
     mergeTrustBatch(spark, Seq(TrustEv("0xa2", "u1", "v1", 50L),
@@ -116,7 +115,7 @@ class ViewMaintenanceSpec extends SparkSpec {
     import org.apache.hadoop.fs.{FileSystem, Path}
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     for (committer <- Seq(RenameCommitter, ConditionalPutCommitter)) {
-      val viewDir = Files.createTempDirectory("graft-race").toString + "/view"
+      val viewDir = tempDir("graft-race") + "/view"
       mergeTrustBatch(spark, Seq(TrustEv("0xa1", "u1", "v1", 10L)).toDF, viewDir,
         version = 0L, committer = committer)
       // a "winner" (zombie twin of batch 1) publishes manifest-1 directly
@@ -143,7 +142,7 @@ class ViewMaintenanceSpec extends SparkSpec {
 
   test("a merge whose commit loses the race leaves the view untouched") {
     import graft.streaming.{ManifestCommitter, RenameCommitter}
-    val viewDir = Files.createTempDirectory("graft-loser").toString + "/view"
+    val viewDir = tempDir("graft-loser") + "/view"
     mergeTrustBatch(spark, Seq(TrustEv("0xa1", "u1", "v1", 10L)).toDF, viewDir, version = 0L)
     val before = viewState(viewDir)
     // a committer that always loses simulates the CAS precondition failing
@@ -162,7 +161,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("compaction folds the view into one generation, content unchanged") {
-    val viewDir = Files.createTempDirectory("graft-compact").toString + "/view"
+    val viewDir = tempDir("graft-compact") + "/view"
     // 6 single-key batches → mapping spread over up to 6 generations
     (1 to 6).foreach { i =>
       mergeTrustBatch(spark, Seq(TrustEv(f"0x$i%02d", s"u$i", "v", i.toLong)).toDF,
@@ -187,7 +186,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("auto-compaction triggers when generations exceed the bound") {
-    val viewDir = Files.createTempDirectory("graft-autocompact").toString + "/view"
+    val viewDir = tempDir("graft-autocompact") + "/view"
     (1 to 5).foreach { i =>
       mergeTrustBatch(spark, Seq(TrustEv(f"0x$i%02d", s"u$i", "v", i.toLong)).toDF,
         viewDir, numBuckets = 8, version = i.toLong, maxGenerations = 2)
@@ -201,8 +200,8 @@ class ViewMaintenanceSpec extends SparkSpec {
 
   test("balances maintenance: sliced micro-batches converge to the batch recompute") {
     implicit val sqlCtx = spark.sqlContext
-    val viewDir = Files.createTempDirectory("graft-balview").toString + "/view"
-    val ckpt = Files.createTempDirectory("graft-balview-ckpt").toString
+    val viewDir = tempDir("graft-balview") + "/view"
+    val ckpt = tempDir("graft-balview-ckpt")
     val all = Seq(
       ("0xa1", "tokA", "u1", "u2", 100L),
       ("0xa2", "tokA", "u2", "u3", 30L),
@@ -252,7 +251,7 @@ class ViewMaintenanceSpec extends SparkSpec {
     ).toDF("event_id", "user_id", "event_type", "props")
     val receipts = ReceiptClassifier.demoReceipts(ev)
     val registry = ReceiptClassifier.demoSignups(ev)
-    val dir = Files.createTempDirectory("graft-timeline").toString + "/view"
+    val dir = tempDir("graft-timeline") + "/view"
     val b1 = receipts.where(col("event_id") % 2 === 1)
     val b2 = receipts.where(col("event_id") % 2 === 0)
     ViewMaintenance.appendBatch(ViewMaintenance.timelineOfBatch(b1, registry), dir, 0L)
@@ -280,8 +279,8 @@ class ViewMaintenanceSpec extends SparkSpec {
       ("0xa3", "tokC", "u1", "u3", 10L), // non-CRC: no ledger rows
       ("0xa4", "tokA", "u3", "u1", 5L)
     )
-    val dir = Files.createTempDirectory("graft-ledgerview").toString + "/view"
-    val ckpt = Files.createTempDirectory("graft-ledgerview-ckpt").toString
+    val dir = tempDir("graft-ledgerview") + "/view"
+    val ckpt = tempDir("graft-ledgerview-ckpt")
     val mem = MemoryStream[(String, String, String, String, Long)]
     val q = ViewMaintenance.startLedgerView(
       mem.toDF().toDF("hash", "token", "from", "to", "value"), () => signups, dir, ckpt)
@@ -297,7 +296,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("replaying a committed batch version is a detected no-op") {
-    val viewDir = Files.createTempDirectory("graft-replay").toString + "/view"
+    val viewDir = tempDir("graft-replay") + "/view"
     mergeTrustBatch(spark, Seq(TrustEv("0xa1", "u1", "v1", 10L)).toDF, viewDir, version = 0L)
     val batch1 = Seq(TrustEv("0xa2", "u1", "v1", 50L)).toDF
     mergeTrustBatch(spark, batch1, viewDir, version = 1L)
@@ -307,7 +306,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("sketch view: sliced micro-batches converge to the batch sketch table") {
-    val viewDir = Files.createTempDirectory("graft-sketchview").toString + "/view"
+    val viewDir = tempDir("graft-sketchview") + "/view"
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("day", col("ts").cast("date"))
       .persist()
@@ -343,7 +342,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("quantile sketch view: sliced merges are BYTE-IDENTICAL to the batch build") {
-    val viewDir = Files.createTempDirectory("graft-qsketchview").toString + "/view"
+    val viewDir = tempDir("graft-qsketchview") + "/view"
     val docs = Tables.documents(spark, "/root/testdata/sf0.001").persist()
     (0 until 3).foreach { i =>
       ViewMaintenance.mergeQuantileSketchesBatch(spark,
@@ -373,7 +372,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("SCD view: sliced out-of-order micro-batches converge to the batch SCD") {
-    val viewDir = Files.createTempDirectory("graft-scdview").toString + "/view"
+    val viewDir = tempDir("graft-scdview") + "/view"
     val evs = Seq(
       ("0xa1", "u1", "v1", 50L, 1L), ("0xa2", "u1", "v1", 50L, 2L),
       ("0xa3", "u1", "v1", 80L, 3L), ("0xa5", "u1", "v1", 0L, 5L),
@@ -408,8 +407,8 @@ class ViewMaintenanceSpec extends SparkSpec {
       ("0xc1", "u1", "v1", 50L, 1L), ("0xc3", "u1", "v1", 50L, 3L),
       ("0xc2", "u1", "v1", 80L, 2L), // arrives in the SECOND micro-batch
       ("0xc4", "u2", "v2", 30L, 4L))
-    val dir = Files.createTempDirectory("graft-scdstream").toString + "/view"
-    val ckpt = Files.createTempDirectory("graft-scdstream-ckpt").toString
+    val dir = tempDir("graft-scdstream") + "/view"
+    val ckpt = tempDir("graft-scdstream-ckpt")
     val mem = MemoryStream[(String, String, String, Long, Long)]
     val q = ViewMaintenance.startTrustScdView(
       mem.toDF().toDF("hash", "user", "can_send_to", "limit", "number"),
@@ -434,7 +433,7 @@ class ViewMaintenanceSpec extends SparkSpec {
     // (one interval if collapsed), then 80@2 arrives late and must split
     // them into 50@[1,2) / 80@[2,3) / 50@[3,∞). The uncollapsed store
     // retains the 50@3 event, so the late merge re-derives it exactly.
-    val viewDir = Files.createTempDirectory("graft-scdlate").toString + "/view"
+    val viewDir = tempDir("graft-scdlate") + "/view"
     val early = Seq(("0xb1", "u1", "v1", 50L, 1L), ("0xb3", "u1", "v1", 50L, 3L))
       .toDF("hash", "user", "can_send_to", "limit", "number")
     val late = Seq(("0xb2", "u1", "v1", 80L, 2L))
@@ -451,7 +450,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("SCD compaction: finalized re-states drop, served view invariant, late merges stay exact") {
-    val viewDir = Files.createTempDirectory("graft-scdcompact").toString + "/view"
+    val viewDir = tempDir("graft-scdcompact") + "/view"
     val evs = Seq( // u1: 50@1, 50@2 (re-state), 80@4, 80@6 (re-state)
       ("0xd1", "u1", "v1", 50L, 1L), ("0xd2", "u1", "v1", 50L, 2L),
       ("0xd4", "u1", "v1", 80L, 4L), ("0xd6", "u1", "v1", 80L, 6L))
@@ -481,7 +480,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("deleteKeys erases subjects, rewrites only their buckets, counts rows") {
-    val viewDir = Files.createTempDirectory("graft-erasure").toString + "/view"
+    val viewDir = tempDir("graft-erasure") + "/view"
     val seed = (1 to 32).map(i => TrustEv(f"0xs$i%02d", s"u$i", "v", 10L))
     mergeTrustBatch(spark, seed.toDF, viewDir, numBuckets = 16)
     def fileState(): Map[String, Long] = {
@@ -509,7 +508,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("deleteKeys: full-bucket erasure unmaps the bucket; unknown key no-ops") {
-    val viewDir = Files.createTempDirectory("graft-erasure2").toString + "/view"
+    val viewDir = tempDir("graft-erasure2") + "/view"
     mergeTrustBatch(spark, Seq(TrustEv("0xa1", "solo", "v", 10L)).toDF, viewDir,
       numBuckets = 4)
     assert(ViewMaintenance.deleteKeys(spark, viewDir, "user", Seq("ghost"),
@@ -528,7 +527,7 @@ class ViewMaintenanceSpec extends SparkSpec {
 
   test("deleteKeys: a lost manifest race publishes nothing") {
     import graft.streaming.{ManifestCommitter, RenameCommitter}
-    val viewDir = Files.createTempDirectory("graft-erasure3").toString + "/view"
+    val viewDir = tempDir("graft-erasure3") + "/view"
     mergeTrustBatch(spark, Seq(TrustEv("0xa1", "u1", "v", 10L),
       TrustEv("0xa2", "u2", "v", 20L)).toDF, viewDir, numBuckets = 4)
     val before = viewState(viewDir)
@@ -558,13 +557,13 @@ class ViewMaintenanceSpec extends SparkSpec {
       readView(spark, dir).select("h").as[Long].collect().toSet
 
     // two different slicings converge to the same stored set
-    val d1 = Files.createTempDirectory("graft-seen1").toString + "/view"
+    val d1 = tempDir("graft-seen1") + "/view"
     (0 until 3).foreach { i =>
       ViewMaintenance.mergeSeenHashesBatch(spark,
         hashes(docs.where(col("doc_id") % 3 === i)), d1,
         numBuckets = 4, version = i.toLong)
     }
-    val d2 = Files.createTempDirectory("graft-seen2").toString + "/view"
+    val d2 = tempDir("graft-seen2") + "/view"
     ViewMaintenance.mergeSeenHashesBatch(spark, hashes(docs), d2, numBuckets = 4)
     assert(seenSet(d1) == seenSet(d2), "slicing must not change the union")
     assert(seenSet(d1) == hashes(docs).distinct().as[Long].collect().toSet)
@@ -578,7 +577,7 @@ class ViewMaintenanceSpec extends SparkSpec {
 
     // the gate: new docs of a candidate batch == text-level anti-join with
     // exact-dedup's min-id keep rule
-    val store = Files.createTempDirectory("graft-seen3").toString + "/view"
+    val store = tempDir("graft-seen3") + "/view"
     ViewMaintenance.mergeSeenHashesBatch(spark,
       hashes(docs.where(col("doc_id") <= 6)), store, numBuckets = 4)
     val cand = docs.where(col("doc_id") > 6)
@@ -593,8 +592,8 @@ class ViewMaintenanceSpec extends SparkSpec {
 
   test("seen-hash store: streaming maintenance converges to the batch union") {
     implicit val sqlCtx = spark.sqlContext
-    val viewDir = Files.createTempDirectory("graft-seenstream").toString + "/view"
-    val ckpt = Files.createTempDirectory("graft-seenstream-ckpt").toString
+    val viewDir = tempDir("graft-seenstream") + "/view"
+    val ckpt = tempDir("graft-seenstream-ckpt")
     val mem = MemoryStream[Long]
     val q = ViewMaintenance.startSeenHashView(
       mem.toDF().select(xxhash64(col("value").cast("string")).as("h")),
@@ -619,7 +618,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("day-count store: sliced merges converge to the one-shot aggregate; replay no-op") {
-    val viewDir = Files.createTempDirectory("graft-daycounts").toString + "/view"
+    val viewDir = tempDir("graft-daycounts") + "/view"
     val ev = dayEvents(
       (1L, "2024-01-01", "a"), (2L, "2024-01-01", "a"), (3L, "2024-01-02", "a"),
       (4L, "2024-01-01", "b"), (5L, "2024-01-02", "b"), (6L, "2024-01-02", "b"))
@@ -667,7 +666,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("rfm rollup store: sliced merges converge bit-for-bit; serve scores match batch") {
-    val viewDir = Files.createTempDirectory("graft-rfm").toString + "/view"
+    val viewDir = tempDir("graft-rfm") + "/view"
     val orders = Seq(
       (1L, 1L, "O", 500.0, "2024-01-01 00:00:00"),
       (2L, 1L, "O", 250.5, "2024-02-01 00:00:00"),
@@ -712,8 +711,8 @@ class ViewMaintenanceSpec extends SparkSpec {
 
   test("day-count store: streaming maintenance converges to the batch rollup") {
     implicit val sqlCtx = spark.sqlContext
-    val viewDir = Files.createTempDirectory("graft-daystream").toString + "/view"
-    val ckpt = Files.createTempDirectory("graft-daystream-ckpt").toString
+    val viewDir = tempDir("graft-daystream") + "/view"
+    val ckpt = tempDir("graft-daystream-ckpt")
     val mem = MemoryStream[(Long, String, String)]
     val toEv = (df: org.apache.spark.sql.DataFrame) => df
       .select(col("_1").as("event_id"),
