@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** The cross-artifact 2× gate's per-key predicate, load-normalized by
@@ -22,22 +21,22 @@ object Bench {
     redefined.filter(k => medByKey.get(k).forall(m =>
       !baseline.get(k).exists(b => wouldFlag(m, b, calibration))))
 
+  /** The ambient-calibration panel: small, code-stable, map-only/trivial
+    * keys (see the calibration in `main`).
+    */
+  private[graft] val CalibrationPanel = Seq("q_extract_details", "q5_region_revenue",
+    "q_classify", "q_token_count", "q_pii_scan", "q_eth_transfers",
+    "q_text_quality", "q_lang_id", "q_chunk", "q_string_funcs",
+    "q_url_domains", "q_latest_event")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // n repeated sweeps: the JSON carries the per-query MEAN (and stdev), so
     // a single noisy run (JIT, page cache, compaction) can't masquerade as a
     // plan regression — or hide one.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // custom SQL functions + optimizer rules active, as in Verify
-    graft.plans.GraftExtensions.registerAll(spark)
+    val spark = LocalSession(cpus)
     // Untimed warmup: JVM/codegen/FileIndex initialization otherwise lands
     // entirely on whichever query happens to run first.
     try {
@@ -64,7 +63,8 @@ object Bench {
     // leaks a build into the published median. Steady-state serve cost is
     // what these keys exist to measure; build cost stays on record in the
     // BENCH_NOTES.md 10x probe tables ("Round-11 10x probe rows").
-    names.collect { case (n, fn) if SparkEntry.storeBackedKeys.contains(n) =>
+    val storeBacked = SparkEntry.all.filter(_.storeBacked).map(_.name).toSet
+    names.collect { case (n, fn) if storeBacked(n) =>
       try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       catch { case _: Throwable => () } // the timed pass will record the failure
     }
@@ -189,12 +189,8 @@ object Bench {
     // regression across the whole panel shows as calibration >> 1,
     // visible rather than silently absorbed. Clamped at 1.0: a FASTER
     // machine must not make unimproved keys look like regressions.
-    val calibrationPanel = Seq("q_extract_details", "q5_region_revenue",
-      "q_classify", "q_token_count", "q_pii_scan", "q_eth_transfers",
-      "q_text_quality", "q_lang_id", "q_chunk", "q_string_funcs",
-      "q_url_domains", "q_latest_event")
     def calibrationOf(byKey: Map[String, Seq[Double]]): Double = {
-      val ratios = calibrationPanel.flatMap { k =>
+      val ratios = CalibrationPanel.flatMap { k =>
         for { b <- baseline.get(k) if b > 0.1; xs <- byKey.get(k) }
           yield median(xs) / b
       }
@@ -234,7 +230,7 @@ object Bench {
     val calibration = math.max(panelFactor, canaryFactor)
     if (calibration > 1.05) System.err.println(
       f"[bench] ambient calibration: machine factor $calibration%.2fx vs committed baseline " +
-        f"(key panel $panelFactor%.2fx over ${calibrationPanel.size} stable keys, " +
+        f"(key panel $panelFactor%.2fx over ${CalibrationPanel.size} stable keys, " +
         f"shuffle canary $canaryFactor%.2fx at $shuffleCanary%.2fs) — " +
         "2x gate compares normalized medians")
     // Keys whose DEFINITION changed since the committed baseline (e.g. an

@@ -38,18 +38,6 @@ object ScalingBench {
     // lineitem-family (wide-agg / pair-enumeration shuffles)
     "q1_pricing_summary", "q_profile", "q_basket_affinity")
 
-  private def session(cpus: Int): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.registerAll(spark)
-    spark
-  }
-
   /** Replicate sf0.1 `factor`× with per-copy key offsets (consistent
     * within each table — copies are disjoint id spaces, so joins behave
     * like `factor` independent shards).
@@ -86,7 +74,7 @@ object ScalingBench {
   }
 
   private def sweep(cpus: Int, dir: String, runs: Int): Map[String, Double] = {
-    val spark = session(cpus)
+    val spark = LocalSession(cpus)
     val fns = SparkEntry.queries.filter { case (n, _) => PanelKeys.contains(n) }
     def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
     // session warmup: scan + shuffle + noop-sink init
@@ -120,7 +108,7 @@ object ScalingBench {
     val runs = args.drop(2).headOption.map(_.toInt).getOrElse(3)
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dir = s"/tmp/graft_scaling_${factor}x"
-    val build = session(32)
+    val build = LocalSession(32)
     buildDataset(build, srcDir, dir, factor)
     build.stop()
     val hi = sweep(32, dir, runs)

@@ -8,17 +8,22 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EntryPointsSpec extends AnyFunSuite {
 
-  test("src/main defines exactly the Bench, Verify, Explain and ScalingBench mains") {
-    val objectDecl = """\bobject\s+(\w+)""".r
-    def sources(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Seq.empty
+  private def sources(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
+    else if (f.getName.endsWith(".scala")) Seq(f)
+    else Seq.empty
+
+  /** (file, text) of every main source file. */
+  private def mainSources: Seq[(java.io.File, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    sources(root).map(f => f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
+  test("src/main defines exactly the Bench, Verify, Explain and ScalingBench mains") {
+    val objectDecl = """\bobject\s+(\w+)""".r
     // each `def main(` belongs to the nearest object declared above it
-    val mains = sources(root).flatMap { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val mains = mainSources.flatMap { case (f, text) =>
       val objects = objectDecl.findAllMatchIn(text).map(m => m.start -> m.group(1)).toSeq
       "def main\\(".r.findAllMatchIn(text).map { m =>
         objects.filter(_._1 < m.start).lastOption.map(_._2)
@@ -26,5 +31,14 @@ class EntryPointsSpec extends AnyFunSuite {
       }
     }
     assert(mains.sorted == Seq("Bench", "Explain", "ScalingBench", "Verify"))
+  }
+
+  test("the mains build their session in one place") {
+    // one builder, so every main plans keys with the same config and the
+    // same registered SQL functions and optimizer rules
+    val sites = mainSources.flatMap { case (f, text) =>
+      Seq.fill("""SparkSession\.builder\(\)""".r.findAllMatchIn(text).size)(f.getName)
+    }
+    assert(sites == Seq("LocalSession.scala"))
   }
 }

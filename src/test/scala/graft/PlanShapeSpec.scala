@@ -277,13 +277,13 @@ class PlanShapeSpec extends SparkSpec {
     import spark.implicits._
     val exploded = Seq(("a", 0, 0.1), ("a", 1, 0.2), ("b", 0, 0.3), ("b", 1, 0.4))
       .toDF("node", "dim", "value")
-    val plan = SparkEntry.graphAnnNodes(exploded).queryExecution.executedPlan.toString
+    val plan = keys.graph.graphAnnNodes(exploded).queryExecution.executedPlan.toString
     assert(!plan.contains("Window"),
       s"graph_ann node build regrew a window:\n$plan")
     assert(!plan.contains("Exchange SinglePartition"),
       s"graph_ann node build collapsed to one partition:\n$plan")
     // ids are unique, non-negative, and the embedding assembles in dim order
-    val rows = SparkEntry.graphAnnNodes(exploded)
+    val rows = keys.graph.graphAnnNodes(exploded)
       .as[(Long, String, Seq[Float])].collect().sortBy(_._2)
     assert(rows.map(_._1).distinct.length == 2)
     assert(rows.forall(_._1 >= 0L), s"vec_id must be non-negative: ${rows.toSeq}")

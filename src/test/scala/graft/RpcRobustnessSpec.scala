@@ -205,8 +205,19 @@ class RpcRobustnessSpec extends SparkSpec {
         def imported(): Long =
           if (!graft.streaming.EventPipeline.committedParquetExists(spark, tableDir)) 0L
           else spark.read.parquet(tableDir).count()
+        // capped at 600 s, but a dead query fails at once and a stall (no
+        // new rows for 60 s, e.g. a valve deadlock) fails at the stall
         val deadline = System.nanoTime() + 600e9.toLong
-        while (imported() < expect && System.nanoTime() < deadline) Thread.sleep(500)
+        var seen = imported()
+        var grewAt = System.nanoTime()
+        while (seen < expect && System.nanoTime() < deadline) {
+          q.exception.foreach(e => fail(s"the import query died: ${e.getMessage}", e))
+          assert(System.nanoTime() - grewAt < 60e9.toLong,
+            s"no import progress for 60 s at $seen of $expect rows")
+          Thread.sleep(500)
+          val now = imported()
+          if (now > seen) { seen = now; grewAt = System.nanoTime() }
+        }
         assert(imported() === expect)
         val table = spark.read.parquet(tableDir)
         // declared counts: per block exactly its tx count, every block once
