@@ -38,7 +38,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
   * all-null scores there; unreachable — every caller encodes corpus rows
   * whose embeddings are non-null, PqSpec's parity pins real rows). A cid
   * absent from the table → NULL (unreachable: lists are built from the
-  * same centroid set). PqKernelSpec pins row-for-row parity against the
+  * same centroid set). An empty sub-codebook throws when the expression
+  * is built. PqKernelSpec pins row-for-row parity against the
   * reference Column spelling on corpus-shaped, short, empty and NaN/Inf
   * vectors.
   */
@@ -57,6 +58,14 @@ object PqCodesImpl {
     else x > y
   }
 
+  /** An empty sub-codebook has no argmax to assign: reject it when the
+    * expression is built (callers return an empty result before building
+    * one for an empty corpus).
+    */
+  def requireNonEmpty(codebooks: Seq[Seq[Array[Float]]]): Unit =
+    require(codebooks.forall(_.nonEmpty),
+      s"PQ codebook has an empty sub-codebook: sizes ${codebooks.map(_.size).mkString(",")}")
+
   /** cb(j)(ci) = centroid; off(j)(ci) = the score offset subtracted after
     * the ×2 (flat: ‖c‖²; residual: 2·(cent_sub·c) + ‖c‖²).
     */
@@ -69,7 +78,6 @@ object PqCodesImpl {
     while (j < m) {
       val cbj = cb(j)
       val offj = off(j)
-      if (cbj.length == 0) return null // unreachable: callers guard empties
       val start = j * subDim
       val rem = n - start
       val len = if (rem < 0) 0 else if (rem > subDim) subDim else rem
@@ -112,6 +120,7 @@ object PqCodesImpl {
 case class PqCodesExpr(child: Expression, codebooks: Seq[Seq[Array[Float]]],
                        subDim: Int, offsets: Seq[Array[Double]])
     extends UnaryExpression {
+  PqCodesImpl.requireNonEmpty(codebooks)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_pq_codes"
@@ -141,6 +150,7 @@ case class PqCodesResidualExpr(left: Expression, right: Expression,
                                cids: Array[Long],
                                offsetsByCid: Seq[Seq[Array[Double]]])
     extends BinaryExpression {
+  PqCodesImpl.requireNonEmpty(codebooks)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_pq_codes_residual"

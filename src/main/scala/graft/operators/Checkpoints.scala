@@ -6,10 +6,15 @@ import org.apache.spark.sql.DataFrame
 
 /** Lineage-cut policy for the iterative operators. The DataFrame loops
   * use [[cut]] on frames: [[Graph]]'s widestPaths, hits, kCore, bfsHops,
-  * stronglyConnectedComponents, labelPropagation, the HyperBall sweeps,
-  * temporalReach, betweenness and randomWalks, [[Dedup.dupClusters]],
-  * [[Ann]]'s labelPropagation and kCenterSample, and
-  * [[Node2Vec.trainSgns]]. The PageRank family uses the RDD arm.
+  * labelPropagation, hyperBallBoth, betweenness and randomWalks, the
+  * [[Fixpoint.minDelta]] loops (stronglyConnectedComponents,
+  * temporalReach and [[Dedup.dupClusters]]), [[Ann]]'s labelPropagation
+  * and kCenterSample, and [[Node2Vec.trainSgns]]. The PageRank family
+  * uses the RDD arm.
+  *
+  * A DataFrame cut is EAGER in both modes: every row is materialized when
+  * [[cut]] returns, so a loop may read an accumulator its projection
+  * ticked, or [[release]] the previous round, right after the cut.
   *
   * Default (no `checkpointDir`): eager `localCheckpoint` per round — flat
   * plans (the 2^n-lineage rule), zero external storage. The blocks live in
@@ -19,12 +24,13 @@ import org.apache.spark.sql.DataFrame
   *
   * With `checkpointDir` set (an HDFS/object-store path at cluster scale):
   * every `every`-th cut is a RELIABLE eager `checkpoint()` to that
-  * directory, and the cuts in between persist WITH lineage intact, so a
-  * lost executor recomputes from the last reliable checkpoint instead of
-  * failing the job. The cost: one distributed write per `every` rounds,
-  * and plans that grow for up to `every` rounds between cuts (bounded —
-  * for a loop that references its state twice per round the plan tree is
-  * ≤ 2^every nodes, so keep `every` modest; 5 ≈ 32-node plans).
+  * directory, and the cuts in between are `persist()` plus a `count()`
+  * that fills the cache, with lineage intact, so a lost executor
+  * recomputes from the last reliable checkpoint instead of failing the
+  * job. The cost: one distributed write per `every` rounds, and lineage
+  * that grows for up to `every` rounds between reliable cuts (bounded —
+  * for a loop that references its state twice per round the recompute
+  * tree is ≤ 2^every nodes, so keep `every` modest; 5 ≈ 32-node plans).
   *
   * The RDD arm serves loops whose state is co-partitioned pair RDDs, so
   * that a round adds one shuffle and no job ([[Graph.pageRank]],
@@ -38,9 +44,10 @@ import org.apache.spark.sql.DataFrame
   */
 object Checkpoints {
 
-  /** Cut `df`'s lineage per the policy. `round` 0 is the pre-loop frame
-    * (always reliably checkpointed when a dir is set — everything chains
-    * from it); rounds 1.. are loop iterations.
+  /** Cut `df`'s lineage per the policy and return it MATERIALIZED, in
+    * both modes. `round` 0 is the pre-loop frame (always reliably
+    * checkpointed when a dir is set — everything chains from it); rounds
+    * 1.. are loop iterations.
     */
   def cut(df: DataFrame, round: Int, checkpointDir: Option[String],
           every: Int = 5): DataFrame = {
@@ -49,7 +56,7 @@ object Checkpoints {
       case Some(dir) =>
         useDir(df.sparkSession.sparkContext, dir)
         if (round % every == 0) df.checkpoint(true)
-        else df.persist()
+        else { val out = df.persist(); out.count(); out }
       case None => df.localCheckpoint(true)
     }
   }

@@ -524,80 +524,32 @@ object Dedup {
     * shallow (boilerplate stars, short mutation chains), so a handful of
     * rounds closes them; each round is two hash-partitioned shuffles
     * (neighbor-min agg + label join) over (id, label) longs — 16 B/row
-    * regardless of corpus width — and the only driver traffic is a 1-row
-    * convergence probe per round. min() is order-independent, so results
-    * don't depend on partitioning. (GraphX does the same propagation; the
+    * regardless of corpus width — and messages flow only out of the ids
+    * whose label improved last round ([[Fixpoint.minDelta]]). A cluster
+    * deeper than `maxIters` rounds fails loud rather than returning a
+    * partial clustering. min() is order-independent, so results don't
+    * depend on partitioning. (GraphX does the same propagation; the
     * DataFrame form keeps Catalyst/AQE in charge and the shuffle payload
     * minimal.)
     */
   def dupClusters(pairs: DataFrame, maxIters: Int = 25,
                   checkpointDir: Option[String] = None,
                   checkpointEvery: Int = 5): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
     val cutRound = new java.util.concurrent.atomic.AtomicInteger(0)
-    def cut(df: DataFrame): DataFrame =
-      Checkpoints.cut(df, cutRound.incrementAndGet(), checkpointDir, checkpointEvery)
-    // like cut, but guaranteed to have MATERIALIZED every row on return
-    // (the accumulator probe reads right after): the reliable-dir policy's
-    // persist() arm is lazy, so force it with a cache-filling count
-    def cutEager(df: DataFrame): DataFrame = {
-      val r = cutRound.incrementAndGet()
-      val out = Checkpoints.cut(df, r, checkpointDir, checkpointEvery)
-      if (checkpointDir.isDefined && r % checkpointEvery != 0) out.count()
-      out
-    }
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist()
-    // each round references the previous labels TWICE (neighbor-min join +
-    // the self merge), so chaining plans would DOUBLE the tree per round —
-    // 2^iters nodes by convergence. The per-round cut (eager
-    // localCheckpoint, or the reliable-checkpoint policy when
-    // checkpointDir is set — [[Checkpoints.cut]]) severs/bounds the
-    // lineage: the next plan starts flat from materialized blocks.
-    //
-    // DELTA propagation + in-materialization probe (the
-    // [[Graph.stronglyConnectedComponents]] minReach discipline): messages
-    // flow only out of nodes whose label IMPROVED last round — a node
-    // whose label is unchanged already delivered that label to every
-    // neighbor in the round it last fired, and labels only decrease, so a
-    // re-send can never lower a neighbor further: per-round merges are
-    // identical to the all-nodes spelling and the fixpoint (min reachable
-    // id) is the same frame, while late rounds shuffle frontier-sized
-    // message sets instead of |V|. The convergence probe rides a
-    // LongAccumulator ticked by the merge projection itself during the
-    // one checkpoint materialization — the old separate labels⋈updated
-    // count() job per round is gone (a task retry can only over-tick,
-    // which costs one extra — then truly empty — round, never a missed
-    // change).
-    var labels = cutEager(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var delta = labels
-    var prevCut = labels // superseded rounds release (linear-growth guard)
-    var changed = -1L
-    var i = 0
-    while (changed != 0 && i < maxIters) {
-      i += 1
-      val acc = sc.longAccumulator("graft-cc-delta")
-      val tick = udf { () => { acc.add(1L); true } }.asNondeterministic()
-      val neighborMin = edges
+    val labels = Fixpoint.minDelta(
+      edges.select(col("src").as("id")).distinct().withColumn("label", col("id")),
+      delta => edges
         .join(delta.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
-        .agg(min("label").as("nlabel"))
-      val merged = cutEager(labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          when(coalesce(col("nlabel") < col("label"), lit(false)), tick())
-            .otherwise(lit(false)).as("ch")))
-      changed = acc.value
-      // merged is materialized; the previous round's label frame — which
-      // both labels and delta pointed into — is superseded. The final
-      // round's frame stays: it IS the result.
-      Checkpoints.release(prevCut)
-      prevCut = merged
-      if (changed != 0) delta = merged.where(col("ch")).select("id", "label")
-      labels = merged.select("id", "label")
-    }
+        .agg(min("label").as("nlabel")),
+      "left",
+      least(col("label"), coalesce(col("nlabel"), col("label"))),
+      coalesce(col("nlabel") < col("label"), lit(false)),
+      maxIters, "dupClusters",
+      Checkpoints.cut(_, cutRound.incrementAndGet(), checkpointDir, checkpointEvery))
     edges.unpersist()
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
       .orderBy("doc_id")

@@ -566,12 +566,11 @@ object Graph {
     * budgets fail loud when exceeded (the [[kCore]] doctrine: a partial
     * answer is a silently wrong one).
     *
-    * Probe discipline: the propagation loops' convergence probes ride a
-    * `LongAccumulator` ticked by the merge projection itself, so the one
-    * checkpoint materialization per iteration IS the probe (no separate
-    * per-iteration `count()` job); trim probes are 1-row counts over the
-    * already-materialized flag frame. All shuffles carry (node, label)
-    * pairs; every iteration is cut by the [[Checkpoints]] policy.
+    * Probe discipline: the propagation loops are [[Fixpoint.minDelta]],
+    * whose one cut per iteration IS the convergence probe; trim probes
+    * are 1-row counts over the already-materialized flag frame. All
+    * shuffles carry (node, label) pairs; every iteration is cut by the
+    * [[Checkpoints]] policy.
     *
     * Node-type generic like [[connectedComponents]] (`least`/`min`
     * order address strings lexicographically = numerically at fixed
@@ -582,55 +581,20 @@ object Graph {
                                   maxIters: Int = 100,
                                   checkpointDir: Option[String] = None,
                                   checkpointEvery: Int = 5): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
     val cutRound = new java.util.concurrent.atomic.AtomicInteger(0)
     def cut(df: DataFrame): DataFrame =
       Checkpoints.cut(df, cutRound.incrementAndGet(), checkpointDir, checkpointEvery)
-    // like cut, but guaranteed to have MATERIALIZED every row on return
-    // (the accumulator probe reads right after): the reliable-dir policy's
-    // persist() arm is lazy, so force it with a cache-filling count
-    def cutEager(df: DataFrame): DataFrame = {
-      val r = cutRound.incrementAndGet()
-      val out = Checkpoints.cut(df, r, checkpointDir, checkpointEvery)
-      if (checkpointDir.isDefined && r % checkpointEvery != 0) out.count()
-      out
-    }
     // min label reachable along `e` from each node (delta propagation);
-    // thread-safe — called concurrently for the fwd and bwd directions
-    def minReach(nodes: DataFrame, e: DataFrame): DataFrame = {
-      var lab = cut(nodes.withColumn("lab", col("node")))
-      var delta = lab
-      var it = 0
-      var changed = -1L // unknown until the first probe
-      while (changed != 0 && it < maxIters) {
-        it += 1
-        val acc = sc.longAccumulator("graft-scc-delta")
-        val tick = udf { () => { acc.add(1L); true } }.asNondeterministic()
-        val msgs = e
+    // called concurrently for the fwd and bwd directions
+    def minReach(nodes: DataFrame, e: DataFrame): DataFrame =
+      Fixpoint.minDelta(nodes.withColumn("lab", col("node")),
+        delta => e
           .join(delta.select(col("node").as("dst"), col("lab").as("ml")), "dst")
-          .groupBy(col("src").as("node")).agg(min("ml").as("ml"))
-        val joined = lab.join(msgs, Seq("node"), "left")
-        // ONE materialization carries the merged labels, the delta flag,
-        // and the convergence probe: tick() fires exactly once per
-        // improved row during the checkpoint job, so reading the
-        // accumulator replaces the old separate count() job (a task
-        // retry can only over-tick, which costs one extra — then truly
-        // empty — iteration, never a missed one)
-        val merged = cutEager(joined.select(col("node"),
-          least(col("lab"), coalesce(col("ml"), col("lab"))).as("lab"),
-          when(coalesce(col("ml") < col("lab"), lit(false)), tick())
-            .otherwise(lit(false)).as("ch")))
-        changed = acc.value
-        if (changed != 0) {
-          lab = merged.select("node", "lab")
-          delta = merged.where(col("ch")).select("node", "lab")
-        }
-      }
-      if (changed != 0) sys.error(
-        s"stronglyConnectedComponents: label propagation did not converge " +
-          s"within maxIters=$maxIters (diameter exceeds the budget)")
-      lab.select("node", "lab")
-    }
+          .groupBy(col("src").as("node")).agg(min("ml").as("ml")),
+        "left",
+        least(col("lab"), coalesce(col("ml"), col("lab"))),
+        coalesce(col("ml") < col("lab"), lit(false)),
+        maxIters, "stronglyConnectedComponents", cut)
     val e0 = cut(edges.where(col("src") =!= col("dst"))
       .select("src", "dst").distinct())
     var active = cut(e0.select(col("src").as("node"))
@@ -932,7 +896,7 @@ object Graph {
     * trailing zeros of the remaining 64−b bits + 1 (w == 0 caps at the
     * suffix width); w > 0 after the unsigned shift so w & −w is safe.
     */
-  private def hllInitRegs(regs: Seq[String], m: Int): Seq[Column] = {
+  private[graft] def hllInitRegs(regs: Seq[String], m: Int): Seq[Column] = {
     val b = java.lang.Integer.numberOfTrailingZeros(m)
     val h = xxhash64(col("node"))
     val bucket = pmod(h, lit(m.toLong))
@@ -947,7 +911,7 @@ object Graph {
   /** HLL estimate over arbitrary register-valued columns, with linear
     * counting below 2.5m: near-exact tiny balls, ~1.04/√m error beyond.
     */
-  private def hllEst(regCols: Seq[Column], m: Int): Column = {
+  private[graft] def hllEst(regCols: Seq[Column], m: Int): Column = {
     val sumInv = regCols.map(r => pow(lit(2.0d), -r)).reduce(_ + _)
     val zeros = regCols.map(r => when(r === 0, 1).otherwise(0))
       .reduce(_ + _).cast("double")
@@ -956,209 +920,52 @@ object Graph {
       lit(m.toDouble) * log(lit(m.toDouble) / zeros)).otherwise(raw)
   }
 
-  /** Approximate NEIGHBORHOOD FUNCTION — NF(t) = Σᵤ |ball(u, t)|, the
-    * number of (source, reachable) pairs within t hops — via per-node
-    * HyperLogLog registers merged along edges: the HyperBall algorithm
-    * (Boldi–Vigna WWW'11; Palmer et al. KDD'02's ANF is the same algebra
-    * over FM bitmasks). This is the SCALE PATH next to [[reachCounts]]'s
-    * exact frontier sets: the exact operator shuffles the reachable-set
-    * *members* (O(Σ|ball|) rows — fine for bounded hops, quadratic on a
-    * dense giant component), while a sketch here is `numRegs` small ints
-    * (64 B/node at the default) no matter how big the ball gets, and a
-    * round is ONE (dst-keyed join + per-register max partial agg). From
-    * NF(t) fall out the classic distance summaries: effective diameter
-    * (smallest t with NF(t) ≥ 0.9·NF(∞)), average distance, connectivity
-    * growth — on graphs where any exact method drowns.
+  /** HyperBall (Boldi–Vigna WWW'11; Palmer et al. KDD'02's ANF is the
+    * same algebra over FM bitmasks): per-node HyperLogLog registers merged
+    * along edges, ONE register sweep serving two outputs.
     *
-    * Round t: reg_j(u,t) = max(reg_j(u,t−1), max over out-neighbors) —
-    * element-wise max is associative/commutative/idempotent, so partial
-    * aggs are exact and the fixpoint is partition-independent; with the
-    * xxhash64-derived registers the whole run is bit-deterministic (same
-    * estimates every rerun, any partitioning). Estimates use the standard
-    * HLL pipeline: raw = α·m²/Σ2^{−M_j} with the linear-counting
-    * small-range correction m·ln(m/V) (raw ≤ 2.5m, V = empty registers) —
-    * tiny balls come out near-exact instead of FM's ~1.8× small-set bias.
-    * Expected HLL error ~1.04/√numRegs per ball (spec'd vs exact BFS).
-    * Per-t NF and the convergence probe share ONE 1-row agg job on the
-    * just-materialized registers — no separate count() action (the SCC
-    * lesson).
-    */
-  def neighborhoodFunction(edges: DataFrame, maxT: Int = 16, numRegs: Int = 16,
-                           checkpointDir: Option[String] = None,
-                           checkpointEvery: Int = 5): DataFrame = {
-    require(numRegs >= 16 && (numRegs & (numRegs - 1)) == 0,
-      s"numRegs must be a power of two >= 16: $numRegs")
-    val m = numRegs
-    val spark = edges.sparkSession
-    def cut(df: DataFrame, round: Int) =
-      Checkpoints.cut(df, round, checkpointDir, checkpointEvery)
-    val e = cut(edges.where(col("src") =!= col("dst"))
-      .select("src", "dst").distinct(), 0).persist()
-    val regs = (0 until m).map(j => s"r$j")
-    var sketches = cut(
-      e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node"))).distinct()
-        .select(col("node") +: hllInitRegs(regs, m): _*), 1)
-    val estCol: Column = hllEst(regs.map(col), m)
-    def stats(df: DataFrame, chCol: Column): (Double, Long, Long) = {
-      val r = df.agg(sum(estCol).as("nf"), sum(chCol.cast("long")).as("ch"),
-        count(lit(1)).as("n")).head()
-      if (r.isNullAt(0)) (0.0d, 0L, 0L) // empty graph
-      else (r.getDouble(0), r.getLong(1), r.getLong(2))
-    }
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Double, Long)]
-    val (nf0, _, n) = stats(sketches, lit(0))
-    buf += ((0, nf0, n))
-    var prevCut = sketches // the frame cut() last returned; superseded rounds release
-    var t = 0
-    var converged = false
-    while (!converged && t < maxT) {
-      t += 1
-      val msgs = e
-        .join(sketches.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(max(col(regs.head)).as(regs.head),
-          regs.tail.map(r => max(col(r)).as(r)): _*)
-      val merged = cut(sketches.as("a")
-        .join(msgs.as("b"), Seq("node"), "left")
-        .select(col("node") +: regs.map(r =>
-          greatest(col(s"a.$r"), coalesce(col(s"b.$r"), lit(0))).as(r)) :+
-          regs.map(r => col(s"a.$r") <
-            coalesce(col(s"b.$r"), lit(0))).reduce(_ || _).as("ch"): _*),
-        t + 1)
-      val (nf, ch, _) = stats(merged, col("ch"))
-      // merged is materialized (stats just ran on it), so round t−1's
-      // sketch blocks are dead — release them or executor storage grows
-      // linearly with rounds
-      Checkpoints.release(prevCut)
-      prevCut = merged
-      buf += ((t, nf, ch))
-      sketches = merged.drop("ch")
-      converged = ch == 0L
-    }
-    e.unpersist()
-    // the NF curve lives in `buf` (driver rows) — the final sketch frame
-    // has no consumer either
-    Checkpoints.release(prevCut)
-    import spark.implicits._
-    // an empty graph has no NF curve — emit NO rows (empty-input totality),
-    // not a t=0 summary of nothing
-    val rows = if (n == 0L) Seq.empty[(Int, Double, Long)] else buf.toSeq
-    rows.toDF("t", "nf_raw", "changed_nodes")
-      .select(col("t"), round(col("nf_raw"), 4).as("nf_est"),
-        round(col("nf_raw") / lit(math.max(n, 1L).toDouble), 4).as("avg_ball_est"),
-        col("changed_nodes"))
-      .orderBy("t")
-  }
-
-  /** Approximate HARMONIC CENTRALITY per node via the same HyperBall sweep
-    * as [[neighborhoodFunction]]: h(u) = Σ_{v reachable, v≠u} 1/d(u,v),
-    * folded incrementally as Σ_t (|B(u,t)|−|B(u,t−1)|)/t — each round's
-    * ball GROWTH is the shell of new nodes at exactly distance t (Boldi–
-    * Vigna's centrality pass). The "who is close to everything" score
-    * that, unlike closeness, is total on disconnected graphs (unreachable
-    * nodes contribute 0, not ∞). NOTE on direction: this scores u by the
-    * set u REACHES along src→dst; classic harmonic centrality ("who can
-    * reach u") is the same call on the REVERSED edge list — the caller
-    * picks the orientation, exactly as the HyperBall paper does.
+    *  - The approximate NEIGHBORHOOD FUNCTION NF(t) = Σᵤ |ball(u, t)|, the
+    *    number of (source, reachable) pairs within t hops. From it fall
+    *    out effective diameter (smallest t with NF(t) ≥ 0.9·NF(∞)),
+    *    average distance and connectivity growth. This is the SCALE PATH
+    *    next to [[reachCounts]]'s exact frontier sets: the exact operator
+    *    shuffles the reachable-set *members* (O(Σ|ball|) rows, quadratic
+    *    on a dense giant component), while a sketch here is `numRegs`
+    *    small ints (64 B/node at the default) no matter how big the ball.
+    *  - Approximate HARMONIC CENTRALITY h(u) = Σ_{v reachable, v≠u}
+    *    1/d(u,v), folded as Σ_t (|B(u,t)|−|B(u,t−1)|)/t: each round's ball
+    *    GROWTH is the shell of new nodes at exactly distance t, and the
+    *    merge projection holds old and new registers in one join row, so
+    *    the fold costs no extra pass. Unlike closeness it stays total on
+    *    disconnected graphs (unreachable nodes add 0, not ∞). The delta
+    *    clamps at 0 where the linear-counting boundary would locally dip
+    *    (max-merged registers are monotone, the corrected estimate is not
+    *    perfectly so). This scores u by the set u REACHES along src→dst;
+    *    classic who-can-reach-u harmonic centrality is the same call on
+    *    the reversed edge list, the caller's choice as in the paper.
     *
-    * Same scale shape as the NF sweep — per round ONE dst-keyed join +
-    * per-register max partial agg, sketches 64 B/node + one running
-    * double — with the shell delta computed IN the merge projection (old
-    * and new registers are both in the join row, so no extra pass); the
-    * delta clamps at 0 where the HLL estimate's linear-counting boundary
-    * would locally dip (max-merge registers are monotone, the corrected
-    * estimate is not perfectly so). Deterministic like the sweep; ~26%
-    * per-ball error at m=16 — ranking quality spec'd, not hash-free.
-    */
-  def harmonicCentrality(edges: DataFrame, maxT: Int = 16, numRegs: Int = 16,
-                         checkpointDir: Option[String] = None,
-                         checkpointEvery: Int = 5): DataFrame = {
-    require(numRegs >= 16 && (numRegs & (numRegs - 1)) == 0,
-      s"numRegs must be a power of two >= 16: $numRegs")
-    val m = numRegs
-    val sc = edges.sparkSession.sparkContext
-    val cutRound = new java.util.concurrent.atomic.AtomicInteger(0)
-    def cut(df: DataFrame): DataFrame =
-      Checkpoints.cut(df, cutRound.incrementAndGet(), checkpointDir, checkpointEvery)
-    // like cut, but guaranteed to have MATERIALIZED every row on return
-    // (the accumulator probe reads right after) — the SCC pattern
-    def cutEager(df: DataFrame): DataFrame = {
-      val r = cutRound.incrementAndGet()
-      val out = Checkpoints.cut(df, r, checkpointDir, checkpointEvery)
-      if (checkpointDir.isDefined && r % checkpointEvery != 0) out.count()
-      out
-    }
-    val e = cut(edges.where(col("src") =!= col("dst"))
-      .select("src", "dst").distinct()).persist()
-    val regs = (0 until m).map(j => s"r$j")
-    var sketches = cut(
-      e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node"))).distinct()
-        .select((col("node") +: hllInitRegs(regs, m)) :+ lit(0.0d).as("h"): _*))
-    var prevCut = sketches // superseded rounds release (linear-growth guard)
-    var t = 0
-    var converged = false
-    while (!converged && t < maxT) {
-      t += 1
-      // ONE job per round: the merge materialization carries the shell
-      // fold AND the convergence probe (accumulator ticked per grown row
-      // — the SCC lesson: no separate agg/count action; a task retry can
-      // only over-tick, costing one extra, then truly empty, round)
-      val acc = sc.longAccumulator("graft-harmonic-delta")
-      val tick = udf { () => { acc.add(1L); true } }.asNondeterministic()
-      val msgs = e
-        .join(sketches.withColumnRenamed("node", "dst").drop("h"), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(max(col(regs.head)).as(regs.head),
-          regs.tail.map(r => max(col(r)).as(r)): _*)
-      val mergedRegs = regs.map(r =>
-        greatest(col(s"a.$r"), coalesce(col(s"b.$r"), lit(0))))
-      val shell = greatest(
-        hllEst(mergedRegs, m) - hllEst(regs.map(r => col(s"a.$r")), m),
-        lit(0.0d))
-      val grew = regs.map(r => col(s"a.$r") <
-        coalesce(col(s"b.$r"), lit(0))).reduce(_ || _)
-      val merged = cutEager(sketches.as("a")
-        .join(msgs.as("b"), Seq("node"), "left")
-        .select((col("node") +:
-          mergedRegs.zip(regs).map { case (c, r) => c.as(r) }) ++ Seq(
-          (col("a.h") + shell / lit(t.toDouble)).as("h"),
-          when(grew, tick()).otherwise(lit(false)).as("ch")): _*))
-      // merged was eagerly materialized (the probe read its accumulator),
-      // so round t−1's sketch blocks are dead — the final round's frame
-      // stays (it IS the result)
-      Checkpoints.release(prevCut)
-      prevCut = merged
-      sketches = merged.drop("ch")
-      converged = acc.value == 0L
-    }
-    e.unpersist()
-    sketches.select(col("node"), round(col("h"), 4).as("harmonic_est"))
-      .orderBy(col("harmonic_est").desc, col("node"))
-  }
-
-  /** ONE fused HyperBall sweep serving BOTH outputs (r11 verdict item 1:
-    * [[neighborhoodFunction]] and [[harmonicCentrality]] are the same
-    * register sweep — harmonic is literally a fold off the per-round ball
-    * growth — yet the two serve keys used to pay it twice). Returns
-    * (nf curve, harmonic scores), each BIT-IDENTICAL to the standalone
-    * operator on the same edge frame: identical register init/merge
-    * expressions, identical convergence condition (stop when no register
-    * grew), and the shell fold computed in the same merge projection.
-    * HyperBallSpec pins both parities.
+    * Round t: reg_j(u,t) = max(reg_j(u,t−1), max over out-neighbors).
+    * Element-wise max is associative/commutative/idempotent, so partial
+    * aggs are exact and the fixpoint is partition-independent; with
+    * xxhash64-derived registers the whole run is bit-deterministic. The
+    * estimate is the standard HLL pipeline, raw = α·m²/Σ2^{−M_j} with the
+    * linear-counting small-range correction m·ln(m/V) (raw ≤ 2.5m, V =
+    * empty registers), so tiny balls come out near-exact instead of FM's
+    * ~1.8× small-set bias; expected error ~1.04/√numRegs per ball. The
+    * sweep stops when no register grew.
     *
-    * Per round: one dst-keyed join + per-register max partial agg + one
-    * 1-row stats agg on the just-cut frame (the agg doubles as the
-    * convergence probe AND materializes the round, so superseded sketch
-    * blocks release immediately). Orientation note for callers fusing the
-    * two keys: NF(t) = #(u,v) pairs within t hops is the SAME quantity on
-    * either orientation (summing forward balls over sources ≡ summing
-    * backward balls over targets), so running this on the REVERSED edge
-    * list keeps classic who-can-reach-u harmonic semantics while the nf
-    * curve still estimates the graph's one neighborhood function (the
-    * per-round HLL estimates differ hash-wise from a forward sweep; the
-    * estimated quantity does not).
+    * Per round: one dst-keyed join + per-register max partial agg, then
+    * one 1-row stats agg on the just-cut frame that yields NF(t) and the
+    * convergence probe together (no separate count job), after which the
+    * superseded sketch blocks are released. Orientation note for callers
+    * fusing two keys: NF(t) is the SAME quantity on either orientation
+    * (summing forward balls over sources ≡ summing backward balls over
+    * targets), so running this on the REVERSED edge list keeps classic
+    * harmonic semantics while the nf curve still estimates the graph's
+    * one neighborhood function (the per-round HLL estimates differ
+    * hash-wise from a forward sweep; the estimated quantity does not).
+    * HyperBallSpec pins both outputs bit for bit against the standalone
+    * sweeps kept in `src/test` as `HyperBallRef`.
     */
   def hyperBallBoth(edges: DataFrame, maxT: Int = 16, numRegs: Int = 16,
                     checkpointDir: Option[String] = None,
@@ -1249,60 +1056,30 @@ object Graph {
     * Scale shape: per round ONE frontier⋈edges join on src (the `ts ≥
     * arrival` predicate rides the join, so dead edges drop before the
     * shuffle) + a min partial agg on dst + a full-outer merge of (node,
-    * long) pairs — frontier-sized frames, never the closure; convergence
-    * probes ride a LongAccumulator ticked in the merge materialization
-    * (no per-round count job); per-round Checkpoints cut; loud maxIters
-    * valve (the kCore no-partial-answer doctrine).
+    * long) pairs — frontier-sized frames, never the closure. The loop is
+    * [[Fixpoint.minDelta]]: probe in the merge materialization, per-round
+    * Checkpoints cut, loud maxIters valve.
     */
   def temporalReach(edges: DataFrame, seeds: DataFrame,
                     startTs: Long = Long.MinValue, maxIters: Int = 100,
                     checkpointDir: Option[String] = None,
                     checkpointEvery: Int = 5): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
     val cutRound = new java.util.concurrent.atomic.AtomicInteger(0)
     def cut(df: DataFrame): DataFrame =
       Checkpoints.cut(df, cutRound.incrementAndGet(), checkpointDir, checkpointEvery)
-    def cutEager(df: DataFrame): DataFrame = {
-      val r = cutRound.incrementAndGet()
-      val out = Checkpoints.cut(df, r, checkpointDir, checkpointEvery)
-      if (checkpointDir.isDefined && r % checkpointEvery != 0) out.count()
-      out
-    }
     val e = cut(edges.where(col("src") =!= col("dst"))
       .select("src", "dst", "ts").distinct()).persist()
-    var arr = cut(seeds.select(col("node")).distinct()
-      .withColumn("arrival", lit(startTs)))
-    var delta = arr
-    var prevCut = arr // superseded rounds release (linear-growth guard)
-    var it = 0
-    var changed = -1L
-    while (changed != 0 && it < maxIters) {
-      it += 1
-      val acc = sc.longAccumulator("graft-temporal-delta")
-      val tick = udf { () => { acc.add(1L); true } }.asNondeterministic()
-      val cand = e
+    val arr = Fixpoint.minDelta(
+      seeds.select(col("node")).distinct().withColumn("arrival", lit(startTs)),
+      delta => e
         .join(delta.withColumnRenamed("node", "src"), "src")
         .where(col("ts") >= col("arrival"))
-        .groupBy(col("dst").as("node")).agg(min("ts").as("cand"))
-      val merged = cutEager(arr.join(cand, Seq("node"), "full_outer")
-        .select(col("node"),
-          least(coalesce(col("arrival"), col("cand")),
-            coalesce(col("cand"), col("arrival"))).as("arrival"),
-          when(col("arrival").isNull ||
-            coalesce(col("cand") < col("arrival"), lit(false)), tick())
-            .otherwise(lit(false)).as("ch")))
-      changed = acc.value
-      // merged is materialized (cutEager + the probe read); the previous
-      // round's arrival frame — which both arr and delta pointed into —
-      // is dead. The final round's frame stays: it IS the result.
-      Checkpoints.release(prevCut)
-      prevCut = merged
-      if (changed != 0) delta = merged.where(col("ch")).select("node", "arrival")
-      arr = merged.select("node", "arrival")
-    }
-    if (changed != 0) sys.error(
-      s"temporalReach: did not converge within maxIters=$maxIters " +
-        "(temporal diameter exceeds the budget)")
+        .groupBy(col("dst").as("node")).agg(min("ts").as("cand")),
+      "full_outer",
+      least(coalesce(col("arrival"), col("cand")),
+        coalesce(col("cand"), col("arrival"))),
+      col("arrival").isNull || coalesce(col("cand") < col("arrival"), lit(false)),
+      maxIters, "temporalReach", cut)
     e.unpersist()
     arr.select(col("node"), col("arrival").as("arrival_us")).orderBy("node")
   }

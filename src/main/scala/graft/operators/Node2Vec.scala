@@ -93,17 +93,6 @@ object Node2Vec {
       s"bad knobs: dim=$dim epochs=$epochs negatives=$negatives")
     def cut(df: DataFrame, round: Int) =
       Checkpoints.cut(df, round, checkpointDir, checkpointEvery)
-    // like cut, but guaranteed MATERIALIZED on return (the Graph-loop
-    // cutEager pattern): dir-mode non-checkpoint rounds persist LAZILY,
-    // and the epoch loop releases the superseded matrices right after —
-    // releasing before anything is cached makes the per-epoch persists
-    // no-ops and re-derives each epoch's subtree at every downstream
-    // reference (emb is referenced 3× per epoch)
-    def cutEager(df: DataFrame, round: Int) = {
-      val out = cut(df, round)
-      if (checkpointDir.isDefined && round % checkpointEvery != 0) out.count()
-      out
-    }
     val p = pairs.select(col("center"), col("context")).persist()
     val vocabNodes = p.select(col("center").as("node"))
       .unionByName(p.select(col("context").as("node"))).distinct()
@@ -172,7 +161,7 @@ object Node2Vec {
       // (m, node)-keyed join + zip_with update: the embedding array never
       // explodes or re-assembles; a node absent from the gradient frame
       // (never sampled on that side this epoch) keeps its vector
-      val newEmb = cutEager(emb
+      val newEmb = cut(emb
         .join(garr, Seq("m", "node"), "left")
         .select(col("m"), col("node"),
           when(col("garr").isNull, col("vec"))

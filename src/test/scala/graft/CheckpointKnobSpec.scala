@@ -73,12 +73,12 @@ class CheckpointKnobSpec extends SparkSpec {
   // the r9 release() paths (superseded-round storage freed) must not
   // change what any loop computes, in either storage mode
   test("HyperBall sweeps: knob-independent with per-round release") {
-    val nfBase = Graph.neighborhoodFunction(edges, maxT = 6).collect().toSeq
-    assert(Graph.neighborhoodFunction(edges, maxT = 6, checkpointDir = ckDir(),
-      checkpointEvery = 2).collect().toSeq == nfBase)
-    val hBase = Graph.harmonicCentrality(edges, maxT = 6).collect().toSeq
-    assert(Graph.harmonicCentrality(edges, maxT = 6, checkpointDir = ckDir(),
-      checkpointEvery = 2).collect().toSeq == hBase)
+    val nfBase = Graph.hyperBallBoth(edges, maxT = 6)._1.collect().toSeq
+    assert(Graph.hyperBallBoth(edges, maxT = 6, checkpointDir = ckDir(),
+      checkpointEvery = 2)._1.collect().toSeq == nfBase)
+    val hBase = Graph.hyperBallBoth(edges, maxT = 6)._2.collect().toSeq
+    assert(Graph.hyperBallBoth(edges, maxT = 6, checkpointDir = ckDir(),
+      checkpointEvery = 2)._2.collect().toSeq == hBase)
   }
 
   test("temporalReach: knob-independent with per-round release") {

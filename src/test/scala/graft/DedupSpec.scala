@@ -243,6 +243,16 @@ class DedupSpec extends SparkSpec {
     assert(r.length == 13 && r.forall(_._2 == 0L))
   }
 
+  test("dupClusters: a path deeper than maxIters fails loud, naming the budget") {
+    // path 0-1-…-29: label 0 needs 29 rounds to reach the far end, so a
+    // 25-round budget would leave a partial clustering (several
+    // cluster_ids on one connected path)
+    val pairs = (0L until 29L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val err = intercept[RuntimeException](
+      Dedup.dupClusters(pairs, maxIters = 25).collect())
+    assert(err.getMessage.contains("maxIters=25"), err.getMessage)
+  }
+
   test("dupClusters over global near-dup pairs groups the testdata duplicates") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val pairs = Dedup.ngramJaccardPairsIndexed(docs, threshold = 0.5, blockBySource = false)

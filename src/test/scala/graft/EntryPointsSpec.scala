@@ -41,4 +41,17 @@ class EntryPointsSpec extends AnyFunSuite {
     }
     assert(sites == Seq("LocalSession.scala"))
   }
+
+  test("the accumulator-probed delta loop and the eager cut each live in one place") {
+    // a second copy of the loop, or a private eager cut beside
+    // Checkpoints.cut, is how the copies drifted apart before
+    val probes = mainSources.collect {
+      case (f, text) if text.contains("longAccumulator(") => f.getName
+    }
+    assert(probes == Seq("Fixpoint.scala"))
+    val cutEagerDefs = mainSources.flatMap { case (f, text) =>
+      Seq.fill("""def\s+cutEager\b""".r.findAllMatchIn(text).size)(f.getName)
+    }
+    assert(cutEagerDefs.isEmpty, s"cutEager defined in $cutEagerDefs")
+  }
 }

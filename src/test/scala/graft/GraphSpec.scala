@@ -520,6 +520,14 @@ class GraphSpec extends SparkSpec {
     assert(got == bruteScc(edges))
   }
 
+  test("scc: label propagation past maxIters fails loud, naming the budget") {
+    // a directed 8-ring trims nothing and needs 8 label rounds a direction
+    val ring = (0L until 8L).map(u => (u, (u + 1) % 8))
+    val err = intercept[RuntimeException](Graph.stronglyConnectedComponents(
+      ring.toDF("src", "dst"), maxIters = 3).collect())
+    assert(err.getMessage.contains("maxIters=3"), err.getMessage)
+  }
+
   test("scc: string node ids and empty input are total") {
     val edges = Seq(("0xaa", "0xbb"), ("0xbb", "0xaa"), ("0xbb", "0xcc"))
     val got = Graph.stronglyConnectedComponents(edges.toDF("src", "dst"))
@@ -807,6 +815,15 @@ class GraphSpec extends SparkSpec {
       Seq.empty[Long].toDF("node")).count() == 0)
   }
 
+  test("temporalReach: a chain deeper than maxIters fails loud, naming the budget") {
+    // arrivals climb one hop a round along 0 → 1 → … → 10
+    val chain = (0L until 10L).map(i => (i, i + 1, 10L * i))
+    val err = intercept[RuntimeException](Graph.temporalReach(
+      chain.toDF("src", "dst", "ts"), Seq(0L).toDF("node"), startTs = 0L,
+      maxIters = 3).collect())
+    assert(err.getMessage.contains("maxIters=3"), err.getMessage)
+  }
+
   /** Exact NF(t) = Σᵤ |ball(u, t)| by BFS from every node. */
   private def bruteNf(edges: Seq[(Long, Long)], maxT: Int): Map[Int, Long] = {
     val adj = edges.filter(e => e._1 != e._2).distinct
@@ -829,7 +846,7 @@ class GraphSpec extends SparkSpec {
     // pseudo-random sparse digraph: 200 nodes, 2 affine out-edges each
     val edges = (0L until 200L).flatMap(u =>
       Seq((u, (u * 7 + 13) % 200), (u, (u * 57 + 5) % 200)))
-    val got = Graph.neighborhoodFunction(edges.toDF("src", "dst"), maxT = 8)
+    val got = Graph.hyperBallBoth(edges.toDF("src", "dst"), maxT = 8)._1
       .as[(Int, Double, Double, Long)].collect().sortBy(_._1)
     val exact = bruteNf(edges, 8)
     // summed over 200 balls the FM register noise averages way down —
@@ -870,7 +887,7 @@ class GraphSpec extends SparkSpec {
   test("harmonicCentrality: hub tops the ranking, sinks score exactly 0, brute band, deterministic") {
     // hub: 0 -> 1..20 (plus a 2-chain so distances vary)
     val hub = (1L to 20L).map(l => (0L, l)) ++ Seq((1L, 21L))
-    val got = Graph.harmonicCentrality(hub.toDF("src", "dst"))
+    val got = Graph.hyperBallBoth(hub.toDF("src", "dst"))._2
       .as[(Long, Double)].collect().toMap
     // pure sinks never grow their sketch -> shell 0 every round -> EXACT 0
     (2L to 20L).foreach(l => assert(got(l) == 0.0, s"leaf $l: ${got(l)}"))
@@ -883,7 +900,7 @@ class GraphSpec extends SparkSpec {
     // plus aggregate band and rerun determinism
     val edges = (0L until 200L).flatMap(u =>
       Seq((u, (u * 7 + 13) % 200), (u, (u * 57 + 5) % 200)))
-    val est = Graph.harmonicCentrality(edges.toDF("src", "dst"), maxT = 12)
+    val est = Graph.hyperBallBoth(edges.toDF("src", "dst"), maxT = 12)._2
       .as[(Long, Double)].collect().toMap
     val ex = bruteHarmonic(edges)
     val sumEst = est.values.sum
@@ -893,20 +910,20 @@ class GraphSpec extends SparkSpec {
     ex.filter(_._2 >= 5.0).foreach { case (u, e) =>
       assert(est(u) > 0.5 * e && est(u) < 2.0 * e, s"node $u: ${est(u)} vs $e")
     }
-    val rerun = Graph.harmonicCentrality(edges.toDF("src", "dst"), maxT = 12)
+    val rerun = Graph.hyperBallBoth(edges.toDF("src", "dst"), maxT = 12)._2
       .as[(Long, Double)].collect().toMap
     assert(rerun == est)
-    assert(Graph.harmonicCentrality(
-      Seq.empty[(Long, Long)].toDF("src", "dst")).count() == 0)
+    assert(Graph.hyperBallBoth(
+      Seq.empty[(Long, Long)].toDF("src", "dst"))._2.count() == 0)
   }
 
   test("neighborhoodFunction: bit-deterministic; converges at the diameter; empty total") {
     // directed 8-cycle: ball(u, t) = t+1 until the full ring at t = 7,
     // so masks change through t=7 and the t=8 round certifies the fixpoint
     val ring = (0L until 8L).map(u => (u, (u + 1) % 8))
-    val a = Graph.neighborhoodFunction(ring.toDF("src", "dst"), maxT = 20)
+    val a = Graph.hyperBallBoth(ring.toDF("src", "dst"), maxT = 20)._1
       .as[(Int, Double, Double, Long)].collect().sortBy(_._1)
-    val b = Graph.neighborhoodFunction(ring.toDF("src", "dst"), maxT = 20)
+    val b = Graph.hyperBallBoth(ring.toDF("src", "dst"), maxT = 20)._1
       .as[(Int, Double, Double, Long)].collect().sortBy(_._1)
     assert(a.toSeq == b.toSeq) // same hashes, same OR algebra → same bits
     assert(a.last._4 == 0L, "last round must certify convergence")
@@ -915,8 +932,8 @@ class GraphSpec extends SparkSpec {
     // identical → nf == 8 * the per-node mean (each independently rounded
     // to 4 dp, so compare at rounding tolerance)
     assert(math.abs(a.last._2 - 8.0 * a.last._3) < 1e-3)
-    val empty = Graph.neighborhoodFunction(
-      Seq.empty[(Long, Long)].toDF("src", "dst"))
+    val empty = Graph.hyperBallBoth(
+      Seq.empty[(Long, Long)].toDF("src", "dst"))._1
     assert(empty.columns.toSeq ==
       Seq("t", "nf_est", "avg_ball_est", "changed_nodes"))
   }

@@ -23,7 +23,7 @@ class HyperBallSpec extends SparkSpec {
 
   test("fused sweep == standalone neighborhoodFunction, bit-for-bit") {
     val e = edges.toDF("src", "dst")
-    val standalone = Graph.neighborhoodFunction(e, maxT = 12).collect().toSeq
+    val standalone = HyperBallRef.neighborhoodFunction(e, maxT = 12).collect().toSeq
     val fused = Graph.hyperBallBoth(e, maxT = 12)._1.collect().toSeq
     assert(fused == standalone)
     assert(fused.nonEmpty && fused.last.getAs[Long]("changed_nodes") == 0L)
@@ -31,7 +31,7 @@ class HyperBallSpec extends SparkSpec {
 
   test("fused sweep == standalone harmonicCentrality, bit-for-bit") {
     val e = edges.toDF("src", "dst")
-    val standalone = Graph.harmonicCentrality(e, maxT = 12).collect().toSeq
+    val standalone = HyperBallRef.harmonicCentrality(e, maxT = 12).collect().toSeq
     val fused = Graph.hyperBallBoth(e, maxT = 12)._2.collect().toSeq
     assert(fused == standalone)
     assert(fused.nonEmpty)

@@ -102,6 +102,18 @@ class PqKernelSpec extends SparkSpec {
     assert(unknown.isNullAt(0))
   }
 
+  test("an empty sub-codebook is rejected when the kernel is built") {
+    // subspace 1 has no centroid: there is no code to assign, so both
+    // kernels refuse the codebook instead of yielding null codes
+    val cb: Seq[Seq[Array[Float]]] = Seq(Seq(Array(1f, 0f)), Seq.empty)
+    val offsets = offsetsOf(cb)
+    val flat = intercept[IllegalArgumentException](PqOps.pqCodes($"e", cb, 2, offsets))
+    assert(flat.getMessage.contains("empty sub-codebook"))
+    val residual = intercept[IllegalArgumentException](
+      PqOps.pqCodesResidual($"e", $"cid", cb, 2, Array(7L), Seq(offsets)))
+    assert(residual.getMessage.contains("empty sub-codebook"))
+  }
+
   test("fused sq8Encode equals the HOF reference on corpus rows") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val (mins, maxs) = Pq.sq8Stats(emb, 64)
